@@ -1,13 +1,20 @@
 package graft.operators
 
+import java.time.Instant
 import java.util.concurrent.{Executors, ScheduledExecutorService, ThreadFactory, TimeUnit}
 import java.util.concurrent.atomic.AtomicReference
 import scala.concurrent.duration.FiniteDuration
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import com.esotericsoftware.kryo.{Kryo, KryoSerializable}
+import com.esotericsoftware.kryo.io.{Input, Output}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** One aggregate row per address.
   * Reference: the external `DiskUsage` output type, /root/reference/README.md:44-48.
@@ -131,6 +138,128 @@ object DiskUsageOp {
   }
 }
 
+/** Per-address (size_bytes, number_files) partials of one inventory scan:
+  * the map-side half of [[DiskUsageOp.aggregate]], folded without a
+  * shuffle. Keys are the UTF-8 bytes of the address (the key before its
+  * first `/`), so a row is folded without decoding it into a `String`.
+  *
+  * Serialized as its entry count and then, per address, the byte length,
+  * the bytes and two longs, under Java serialization and Kryo alike.
+  */
+private[graft] final class AddressPartials
+    extends java.io.Externalizable with KryoSerializable {
+  private var sums = new java.util.HashMap[UTF8String, Array[Long]]()
+
+  private def size: Int = sums.size
+
+  /** Fold one `(key STRING, size BIGINT)` row. A null key, or a key
+    * without `/`, is dropped (`contains("/")` in [[DiskUsageOp.aggregate]]);
+    * the address is the bytes before the first `/` (`substring_index`;
+    * `/` is one byte that never occurs inside a multi-byte character). A
+    * null size — S3 Inventory's delete markers — adds 0 bytes and 1 file,
+    * as the reference's raw int64 read does. Sums overflow loudly, like
+    * ANSI `SUM`.
+    */
+  def add(row: InternalRow): AddressPartials = {
+    if (!row.isNullAt(0)) {
+      val key = row.getUTF8String(0)
+      val base = key.getBaseObject
+      val off = key.getBaseOffset
+      val n = key.numBytes
+      var i = 0
+      while (i < n && Platform.getByte(base, off + i) != '/') i += 1
+      if (i < n) {
+        val bytes = if (row.isNullAt(1)) 0L else row.getLong(1)
+        val address = UTF8String.fromAddress(base, off, i) // a view into the row
+        val acc = sums.get(address)
+        if (acc == null) sums.put(address.copy(), Array(bytes, 1L))
+        else {
+          acc(0) = Math.addExact(acc(0), bytes)
+          acc(1) += 1
+        }
+      }
+    }
+    this
+  }
+
+  /** Merge two partials; returns the larger, with the smaller folded in. */
+  def merge(other: AddressPartials): AddressPartials = {
+    val (into, from) = if (size >= other.size) (this, other) else (other, this)
+    from.sums.forEach { (k, v) =>
+      into.sums.merge(k, v, (a, b) => {
+        a(0) = Math.addExact(a(0), b(0))
+        a(1) = Math.addExact(a(1), b(1))
+        a
+      }): Unit
+    }
+    into
+  }
+
+  /** The served lookup map: built once, never mutated afterwards. */
+  def served: java.util.Map[String, DiskUsage] = {
+    val m = new java.util.HashMap[String, DiskUsage](AddressPartials.capacity(size))
+    sums.forEach { (k, v) =>
+      val address = k.toString
+      m.put(address, DiskUsage(address, v(0), v(1))): Unit
+    }
+    m
+  }
+
+  private def writeTo(out: java.io.DataOutput): Unit = {
+    out.writeInt(size)
+    sums.forEach { (k, v) =>
+      out.writeInt(k.numBytes)
+      out.write(k.getBytes)
+      out.writeLong(v(0))
+      out.writeLong(v(1))
+    }
+  }
+
+  private def readFrom(in: java.io.DataInput): Unit = {
+    val n = in.readInt()
+    sums = new java.util.HashMap[UTF8String, Array[Long]](AddressPartials.capacity(n))
+    (0 until n).foreach { _ =>
+      val b = new Array[Byte](in.readInt())
+      in.readFully(b)
+      sums.put(UTF8String.fromBytes(b), Array(in.readLong(), in.readLong()))
+    }
+  }
+
+  override def writeExternal(out: java.io.ObjectOutput): Unit = writeTo(out)
+  override def readExternal(in: java.io.ObjectInput): Unit = readFrom(in)
+  override def write(kryo: Kryo, out: Output): Unit = {
+    val d = new java.io.DataOutputStream(out)
+    writeTo(d)
+    d.flush()
+  }
+  override def read(kryo: Kryo, in: Input): Unit = readFrom(new java.io.DataInputStream(in))
+}
+
+private[graft] object AddressPartials {
+  private def capacity(n: Int): Int = (n / 0.75).toInt + 1
+
+  /** [[DiskUsageOp.aggregate]] as ONE Spark job that returns its result to
+    * the driver: each scan task folds its rows into a partial, and
+    * `treeAggregate` (depth 2) merges the partials. With few scan
+    * partitions the driver merges them all; with P partitions it adds
+    * executor-side merge levels, so the driver merges about √P. The
+    * Catalyst plan is kept up to the projection, which prunes the scan to
+    * the two columns, and the job runs as one tracked SQL execution, so
+    * the UI and `QueryExecutionListener`s see it like any action.
+    */
+  def fold(inventory: DataFrame, keyCol: String, sizeCol: String): AddressPartials = {
+    val qe = inventory
+      .select(col(keyCol).cast("string"), col(sizeCol).cast("long"))
+      .queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("disk usage refresh")) {
+      qe.toRdd.treeAggregate(new AddressPartials)((p, row) => p.add(row), (a, b) => a.merge(b))
+    }
+  }
+}
+
+/** A failed refresh: when it failed and why. */
+final case class RefreshFailure(at: Instant, message: String)
+
 /** Periodic-refresh serving handler: the reference's whole lifecycle
   * (/root/reference/handler.go:39-92,257-262) on Spark.
   *
@@ -140,16 +269,24 @@ object DiskUsageOp {
   *  - Construction runs one synchronous refresh (run-at-start, handler.go:58)
   *    so callers can query immediately, then schedules the periodic job
   *    (handler.go:56-66).
+  *  - A refresh is one Spark job ([[AddressPartials.fold]]): scan tasks fold
+  *    per-address partial sums, which merge up a `treeAggregate` tree into
+  *    the map that [[getDiskUsage]] serves — no shuffle, no distributed
+  *    result to collect back. The tree bounds the partials the driver
+  *    merges to about √P for P scan partitions.
   *  - Each refresh fully replaces the served snapshot via AtomicReference swap
-  *    — the race-free version of handler.go:30,252,258.
-  *  - A failed refresh logs and KEEPS the previous snapshot. This deliberately
-  *    fixes the reference's `log.Fatalf`-kills-the-process behavior on decode
-  *    errors (handler.go:176,186,192).
+  *    — the race-free version of handler.go:30,252,258. A published map is
+  *    never mutated.
+  *  - A failed refresh KEEPS the previous snapshot and is recorded in
+  *    [[lastFailure]]. This deliberately fixes the reference's
+  *    `log.Fatalf`-kills-the-process behavior on decode errors
+  *    (handler.go:176,186,192).
   *
-  * The collected map is valid while address cardinality fits driver memory
-  * (true for the reference's use case). At higher cardinality, serve from the
-  * aggregated DataFrame itself (cached / complete-mode memory sink) and probe
-  * with `filter(col("address") === addr)` — see [[DiskUsageOp.aggregate]].
+  * The driver holds the merged map of all addresses, which is valid while
+  * address cardinality fits driver memory (true for the reference's use
+  * case). At higher cardinality, serve from the aggregated DataFrame itself
+  * (cached / complete-mode memory sink) and probe with
+  * `filter(col("address") === addr)` — see [[DiskUsageOp.aggregate]].
   */
 final class DiskUsageHandler(
     loadInventory: () => DataFrame,
@@ -158,21 +295,33 @@ final class DiskUsageHandler(
     sizeCol: String = "size")
     extends AutoCloseable {
 
-  private val snapshot = new AtomicReference[Map[String, DiskUsage]](Map.empty)
+  private val snapshot =
+    new AtomicReference[java.util.Map[String, DiskUsage]](java.util.Collections.emptyMap())
   private val refreshes = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val failure = new AtomicReference[Option[RefreshFailure]](None)
 
   /** Synchronized: overlapping refreshes (scheduler tick + manual call)
     * would otherwise race compute-then-set and could publish the OLDER
     * inventory's snapshot over the newer one.
     */
   def refreshOnce(): Unit = synchronized {
-    val rows = DiskUsageOp
-      .aggregate(loadInventory(), keyCol, sizeCol)
-      .withColumnsRenamed(Map("size_bytes" -> "sizeBytes", "number_files" -> "numberFiles"))
-      .as(Encoders.product[DiskUsage])
-      .collect()
-    snapshot.set(rows.iterator.map(d => d.address -> d).toMap) // handler.go:252, race-free
+    val next =
+      try AddressPartials.fold(loadInventory(), keyCol, sizeCol).served
+      catch {
+        case NonFatal(e) =>
+          failure.set(Some(RefreshFailure(Instant.now(), describe(e))))
+          throw e
+      }
+    snapshot.set(next) // handler.go:252, race-free
     refreshes.incrementAndGet(): Unit
+  }
+
+  /** The exception, and its root cause when that is another one: Spark
+    * wraps a task's or a result handler's exception in its own.
+    */
+  private def describe(e: Throwable): String = {
+    val root = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).toSeq.last
+    if (root eq e) e.toString else s"$e; root cause: $root"
   }
 
   private val exec: ScheduledExecutorService =
@@ -187,7 +336,7 @@ final class DiskUsageHandler(
     () =>
       try refreshOnce()
       catch { // cron.Recover chain, handler.go:48 — survive, keep old snapshot
-        case NonFatal(e) => System.err.println(s"[disk-usage] refresh failed: ${e.getMessage}")
+        case NonFatal(_) => () // recorded in lastFailure
       },
     refreshEvery.toMillis,
     refreshEvery.toMillis,
@@ -196,9 +345,14 @@ final class DiskUsageHandler(
   /** Point lookup (/root/reference/handler.go:257-262); `None` is the
     * idiomatic `ErrNotFound` (/root/reference/types.go:6).
     */
-  def getDiskUsage(address: String): Option[DiskUsage] = snapshot.get.get(address)
+  def getDiskUsage(address: String): Option[DiskUsage] = Option(snapshot.get.get(address))
 
   def refreshCount: Long = refreshes.get()
+
+  /** The most recent failed refresh, scheduled or manual; a later success
+    * does not clear it (compare [[refreshCount]] to see one happened).
+    */
+  def lastFailure: Option[RefreshFailure] = failure.get
 
   def close(): Unit = exec.shutdownNow() // handler.go:70-72
 }

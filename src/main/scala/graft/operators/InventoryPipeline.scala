@@ -3,7 +3,13 @@ package graft.operators
 import java.time.Instant
 
 import scala.concurrent.duration.FiniteDuration
+import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.schema.Type
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sources.{Inventory, Manifest}
@@ -14,6 +20,14 @@ import graft.sources.{Inventory, Manifest}
   * file list as ONE multi-path parquet read (the §2.4 accumulate-not-
   * overwrite fix), aggregate, serve.
   *
+  * A refresh is one Spark job. The scan reads `key STRING, size BIGINT`
+  * with a declared schema, so no schema-inference job runs first; instead
+  * the driver reads the parquet footer of the first listed file and fails
+  * the refresh if `key` (binary) or `size` (int64) is missing — the same
+  * one-file coverage inference gives. The served handler's fold
+  * ([[DiskUsageHandler]]) then merges per-task partials up a
+  * `treeAggregate` tree into the driver's map of all addresses.
+  *
   * I/O is injected: `fetch` returns the manifest JSON for a key (None =
   * not found, mapping the reference's ErrNotFound probe,
   * handler.go:146-164); `dataRoot` prefixes manifest file keys into
@@ -22,8 +36,9 @@ import graft.sources.{Inventory, Manifest}
   */
 object InventoryPipeline {
 
-  /** Manifest + inventory DataFrame for `now`'s day, or yesterday's on
-    * fallback; None when neither day has a manifest.
+  /** Manifest + `(key, size)` inventory DataFrame for `now`'s day, or
+    * yesterday's on fallback; None when neither day has a manifest. Throws
+    * when the manifest's first file lacks either column.
     */
   def inventoryForDay(
       spark: SparkSession,
@@ -34,7 +49,42 @@ object InventoryPipeline {
     Manifest
       .resolveWithFallback(now)(ts => fetch(Manifest.manifestKey(prefix, ts)))
       .map(Manifest.parseInventory)
-      .map(inv => (inv, spark.read.parquet(inv.dataPaths(dataRoot): _*)))
+      .map { inv =>
+        val paths = inv.dataPaths(dataRoot)
+        require(paths.nonEmpty, "manifest lists no inventory files")
+        requireColumns(spark, paths.head)
+        (inv, spark.read.schema(schema).parquet(paths: _*))
+      }
+
+  /** The two inventory columns the pipeline reads (handler.go:205-221). */
+  private val schema = "key STRING, size BIGINT"
+
+  /** Fail unless the footer of the first data file under `path` (a file,
+    * or a directory of part files) has a binary `key` and an int64
+    * `size`. Names match case-insensitively, as Spark resolves them.
+    */
+  private def requireColumns(spark: SparkSession, path: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val status = fs.getFileStatus(root)
+    val file =
+      if (!status.isDirectory) status
+      else fs.listStatus(root).filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith(".")).sortBy(_.getPath.getName).headOption
+        .getOrElse(sys.error(s"no data files under $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val fields =
+      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq
+      finally reader.close()
+    def need(name: String, t: PrimitiveTypeName): Unit =
+      if (!fields.exists(f => f.getName.equalsIgnoreCase(name) && f.isPrimitive &&
+          !f.isRepetition(Type.Repetition.REPEATED) &&
+          f.asPrimitiveType.getPrimitiveTypeName == t))
+        sys.error(s"inventory file ${file.getPath} has no $t column '$name'")
+    need("key", PrimitiveTypeName.BINARY)
+    need("size", PrimitiveTypeName.INT64)
+  }
 
   /** Serving handler over the manifest-driven pipeline: every refresh
     * re-resolves the manifest for the current day — i.e. the cron job of

@@ -52,7 +52,11 @@ object AnnIndex {
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
     val srcBytes = source.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (srcBytes > BigInt(width) * maxSplit) df.repartition(col("cell")) else df
+    // the local sort makes row order inside each file independent of
+    // shuffle fetch order, which keeps the artifact byte-identical
+    if (srcBytes > BigInt(width) * maxSplit)
+      df.repartition(col("cell")).sortWithinPartitions("cell", "id")
+    else df
   }
 
   /** Train the quantizer and write the (centroids, cell-partitioned

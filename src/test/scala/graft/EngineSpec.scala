@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -364,6 +365,152 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       readers.foreach(_.join())
       assert(bad.get() == 0, s"${bad.get()} torn reads observed")
       assert(h.getDiskUsage("u").contains(DiskUsage("u", 1200L, 2L)))
+    } finally h.close()
+  }
+
+  /** A (key, size) inventory as an RDD-backed frame with exactly `parts`
+    * scan partitions, so the fold sees that many partials.
+    */
+  private def inventoryIn(rows: Seq[(String, java.lang.Long)], parts: Int) =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (k, s) => org.apache.spark.sql.Row(k, s) }, parts),
+      org.apache.spark.sql.types.StructType.fromDDL("key STRING, size BIGINT"))
+
+  /** Jobs and stages the body submits, read from the status tracker. */
+  private def jobsAndStages(body: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    val tracker = sc.statusTracker
+    val ids = tracker.getJobIdsForGroup(group).toSeq
+    val deadline = System.currentTimeMillis() + 10000
+    def done = ids.forall(i => tracker.getJobInfo(i).exists(
+      _.status == org.apache.spark.JobExecutionStatus.SUCCEEDED))
+    while (!done && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    (ids.size, ids.flatMap(i => tracker.getJobInfo(i).toSeq.flatMap(_.stageIds.toSeq)).size)
+  }
+
+  test("handler: an address whose objects all have a null size is served, not a failed refresh") {
+    // S3 Inventory gives delete markers a null size; the reference reads
+    // them as int64 0, so they add 0 bytes and 1 file
+    val rows: Seq[(String, java.lang.Long)] = Seq(("u/a", 5L), ("u/b", null), ("dm/x", null))
+    val h = new DiskUsageHandler(() => inventoryIn(rows, 2), refreshEvery = 10.minutes)
+    try {
+      assert(h.getDiskUsage("u").contains(DiskUsage("u", 5L, 2L)))
+      assert(h.getDiskUsage("dm").contains(DiskUsage("dm", 0L, 1L)))
+    } finally h.close()
+  }
+
+  test("refresh fold equals DiskUsageOp.aggregate at 1 and 64 partitions, in one job") {
+    val rnd = new scala.util.Random(7)
+    val edge: Seq[(String, java.lang.Long)] = Seq(
+      ("noslash", 100L), ("/leading", 3L), ("/", 4L), ("a//b", 5L), ("a/b/c", 6L),
+      ("ü/x", 7L), ("日本/ファイル", 8L), ("日本", 9L), ("ß/", null), ("ß/y", 10L),
+      (null, 11L), (null, null), ("", 12L), ("deleted/only", null))
+    val bulk: Seq[(String, java.lang.Long)] = (1 to 5000).map { i =>
+      val addr = Seq("alice", "bob", "ünï", "", "日本")(rnd.nextInt(5)) + (i % 97)
+      (s"$addr/obj$i", if (i % 50 == 0) null else java.lang.Long.valueOf(rnd.nextInt(1 << 20).toLong))
+    }
+    val rows = rnd.shuffle(edge ++ bulk)
+    Seq(1 -> 1, 64 -> 2).foreach { case (parts, stages) =>
+      val inv = inventoryIn(rows, parts)
+      // the reference sums to NULL where every size is null; the fold
+      // serves 0 there (previous test), the only place the two differ
+      val want = DiskUsageOp.aggregate(inv).collect().map(r =>
+        r.getString(0) -> DiskUsage(r.getString(0),
+          if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2))).toMap
+      assert(want.contains("") && want.contains("a") && want.contains("日本") &&
+        want.contains("ß") && want("deleted") == DiskUsage("deleted", 0L, 1L))
+      var got: Map[String, DiskUsage] = null
+      // 64 partials merge through one executor-side treeAggregate level
+      // (a second stage); either way the refresh is a single job
+      assert(jobsAndStages {
+        got = AddressPartials.fold(inv, "key", "size").served.asScala.toMap
+      } == ((1, stages)), s"at $parts partitions")
+      assert(got == want, s"at $parts partitions")
+      val h = new DiskUsageHandler(() => inv, refreshEvery = 10.minutes)
+      try want.foreach { case (a, d) => assert(h.getDiskUsage(a).contains(d)) }
+      finally h.close()
+    }
+  }
+
+  test("refresh partials serialize as address bytes plus two longs under Java and Kryo") {
+    val p = AddressPartials.fold(inventoryIn(
+      (1 to 1000).map(i => (s"addr$i/o", java.lang.Long.valueOf(i.toLong))), 1), "key", "size")
+    val payload = 4 + (1 to 1000).map(i => 4 + s"addr$i".length + 16).sum
+    val conf = spark.sparkContext.getConf
+    Seq(new org.apache.spark.serializer.JavaSerializer(conf),
+        new org.apache.spark.serializer.KryoSerializer(conf)).foreach { ser =>
+      val inst = ser.newInstance()
+      val bytes = inst.serialize(p)
+      assert(bytes.remaining() < payload + 200,
+        s"${ser.getClass.getSimpleName}: ${bytes.remaining()} bytes for a $payload-byte payload")
+      assert(inst.deserialize[AddressPartials](bytes).served == p.served)
+    }
+  }
+
+  test("an overflowing address sum fails the refresh and keeps the previous snapshot") {
+    var rows: Seq[(String, java.lang.Long)] = Seq(("u/a", 1L))
+    var parts = 1
+    val h = new DiskUsageHandler(() => inventoryIn(rows, parts), refreshEvery = 10.minutes)
+    try {
+      assert(h.lastFailure.isEmpty)
+      rows = Seq(("u/a", Long.MaxValue), ("u/b", 1L))
+      // overflow inside one scan task, then in the merge of two partials
+      Seq(1, 2).foreach { p =>
+        parts = p
+        val before = java.time.Instant.now()
+        intercept[Exception](h.refreshOnce())
+        assert(h.getDiskUsage("u").contains(DiskUsage("u", 1L, 1L)), s"$p partitions")
+        val f = h.lastFailure
+        assert(f.exists(x => !x.at.isBefore(before) && x.message.contains("overflow")), f.toString)
+      }
+      assert(h.refreshCount == 1)
+    } finally h.close()
+  }
+
+  test("a failed scheduled refresh is recorded, not just logged") {
+    var fail = false
+    val h = new DiskUsageHandler(
+      () => if (fail) sys.error("decode error") else inventoryIn(Seq(("u/a", 1L)), 1),
+      refreshEvery = 100.millis)
+    try {
+      fail = true
+      val deadline = System.currentTimeMillis() + 10000
+      while (h.lastFailure.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(h.lastFailure.exists(_.message.contains("decode error")))
+      assert(h.getDiskUsage("u").contains(DiskUsage("u", 1L, 1L)))
+    } finally h.close()
+  }
+
+  test("manifest-driven refresh whose first file has no size column fails and keeps the snapshot") {
+    import java.nio.file.{Files, Paths}
+    import java.time.Instant
+    import spark.implicits._
+    val bucket = Files.createTempDirectory("nosize").toString
+    // the bad file is first in the manifest and in path order, the file
+    // Spark's schema inference would read
+    Seq(("alice/a", 10L)).toDF("key", "size").coalesce(1).write.parquet(s"$bucket/data/b-good")
+    Seq(("alice/b", "x")).toDF("key", "other").coalesce(1).write.parquet(s"$bucket/data/a-nosize")
+    val now = Instant.parse("2026-08-12T09:00:00Z")
+    val key = graft.sources.Manifest.manifestKey("inv/p", now)
+    Files.createDirectories(Paths.get(s"$bucket/$key").getParent)
+    def deliver(files: String*): Unit = Files.writeString(Paths.get(s"$bucket/$key"),
+      files.map(f => s"""{"key":"data/$f","size":1}""").mkString(
+        """{"sourceBucket":"b","files":[""", ",", "]}"))
+    val fetch = (k: String) => {
+      val p = Paths.get(s"$bucket/$k")
+      if (Files.exists(p)) Some(Files.readString(p)) else None
+    }
+    deliver("b-good")
+    val h = InventoryPipeline.servingHandler(spark, s"file:$bucket", "inv/p", () => now, fetch,
+      refreshEvery = 10.minutes)
+    try {
+      assert(h.getDiskUsage("alice").contains(DiskUsage("alice", 10L, 1L)))
+      deliver("a-nosize", "b-good")
+      intercept[Exception](h.refreshOnce())
+      assert(h.getDiskUsage("alice").contains(DiskUsage("alice", 10L, 1L)))
     } finally h.close()
   }
 
@@ -6051,20 +6198,37 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one file per (input partition × cell), the guide §6 small-files
     // trap; the clustered write must land exactly one file per cell dir
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val dir = Files.createTempDirectory("anncluster").toString
+    val Seq(dir, again) = Seq("anncluster", "anncluster2").map(Files.createTempDirectory(_).toString)
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try {
       spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
       graft.sources.AnnIndex.build(emb, k = 4, iters = 2, dir)
+      // the same corpus, stored in reverse: rows reach the clustering
+      // exchange in another order, as shuffle fetch order varies between
+      // runs on a cluster
+      val reversed = Files.createTempDirectory("annreversed").toString + "/emb"
+      emb.orderBy(desc("vec_id")).coalesce(1).write.parquet(reversed)
+      graft.sources.AnnIndex.build(spark.read.parquet(reversed), k = 4, iters = 2, again)
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
-    val cellDirs = new java.io.File(s"$dir/corpus").listFiles()
+    def cellFiles(root: String) = new java.io.File(s"$root/corpus").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+      .map(d => d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet")).toSeq)
+      .toMap
+    val cellDirs = cellFiles(dir)
     assert(cellDirs.nonEmpty, s"expected cell= partition dirs under $dir/corpus")
-    cellDirs.foreach { d =>
-      val n = d.listFiles().count(_.getName.endsWith(".parquet"))
-      assert(n == 1,
-        s"cell dir ${d.getName} must hold ONE clustered file, got $n")
+    cellDirs.foreach { case (d, files) =>
+      assert(files.size == 1,
+        s"cell dir $d must hold ONE clustered file, got ${files.size}")
     }
+    // the documented contract: same corpus + params → byte-identical
+    // artifact content, also when the clustering exchange is engaged
+    assert(cellFiles(again).keySet == cellDirs.keySet)
+    val digests = (m: Map[String, Seq[java.io.File]]) => m.map { case (d, fs) =>
+      d -> fs.map(f => java.util.HexFormat.of().formatHex(java.security.MessageDigest
+        .getInstance("SHA-256").digest(Files.readAllBytes(f.toPath))))
+    }
+    assert(digests(cellFiles(again)) == digests(cellDirs),
+      "two builds of the same corpus must write byte-identical cell files")
     // the layout decision never changes the answer: serving off the
     // clustered artifact equals the in-memory operator
     val idx = graft.sources.AnnIndex.load(spark, dir)
