@@ -1,12 +1,13 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Similarity
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming ANN serving — the ONLINE half of the IVF story: the index is
   * built once offline ([[graft.operators.Similarity.trainCentroids]] +
@@ -31,11 +32,8 @@ import graft.operators.Similarity
   * answer-sized (|queries|·k), never corpus-sized; the corpus-side cell
   * assignment is computed ONCE at index build and reused by every batch.
   *
-  * Append is not idempotent under `foreachBatch`'s at-least-once replay,
-  * so the store keeps the last applied batch id and drops re-deliveries
-  * at or below it (the [[CmsStream.SketchStore]] monotone-guard
-  * discipline); the swap is atomic and lineage-cut
-  * ([[ComponentsStream.LabelStore]]'s materialize-before-swap).
+  * Append is not idempotent, so exactly-once rests on the [[BatchStore]]
+  * guard.
   */
 object AnnServeStream {
 
@@ -66,113 +64,52 @@ object AnnServeStream {
   /** (query_id, neighbor_id, score, rank) answers accumulated across
     * batches.
     *
-    * Durability (with `durable` set): the answer table is APPEND-ONLY
-    * (per-query results are independent and each query lands in exactly
-    * one batch), so each batch's answers persist as a [[SnapshotStore]]
-    * delta log — per-batch I/O is O(batch·k), never O(history) —
-    * written BEFORE the batch is acknowledged; a rebuilt store restores
-    * the union of complete deltas via [[AnswerStore.restore]] and
-    * replayed batches drop on the restored monotone guard. Every batch
-    * writes a delta — even an empty one — so the guard itself is
-    * durable. Every `compactEvery`-th applied batch additionally folds
-    * the accumulated table into a full `upto=` snapshot (partitioned)
-    * and prunes the deltas it supersedes — without this a long-lived
-    * stream pays O(#batches-ever) directory listings, `_SUCCESS` checks
-    * and parquet footers at every restore, unbounded even though
-    * steady-state I/O is fine.
+    * Durability (with `durable` set): [[ContaminationStream.PairStore]]'s
+    * append-only layout — each batch commits its answers as a delta
+    * (O(batch·k), even when empty, so the guard is durable), every
+    * `compactEvery`-th batch a full snapshot that prunes the deltas it
+    * covers, so a long-lived stream does not pay O(#batches-ever)
+    * listings and footers at every restore.
     */
   final class AnswerStore(spark: SparkSession, initial: DataFrame,
       durable: Option[String] = None, compactEvery: Int = 64) {
     require(compactEvery >= 1, s"compactEvery must be >= 1: $compactEvery")
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count() // force now: a failed serve must fail BEFORE the swap
-      cut
-    }
-    private val ref = new AtomicReference[DataFrame](materialize(
-      initial.select(col("query_id"), col("neighbor_id"), col("score"), col("rank"))))
-    private val lastBatch = new AtomicLong(-1L)
-    @volatile private var lastCompact = -1L
+    private val core = new BatchStore[DataFrame](materialize(answers(initial)),
+      Seq(_), durable.map(dir => BatchStore.Log(spark, dir, deltas = Some(dir),
+        every = compactEvery)))
 
     /** The current answer table — always fully materialized. */
-    def current: DataFrame = ref.get()
-
-    private[streaming] def seed(df: DataFrame, upto: Long,
-        snapAt: Long = -1L): Unit = synchronized {
-      val next = materialize(df.select(
-        col("query_id"), col("neighbor_id"), col("score"), col("rank")))
-      val old = ref.get()
-      ref.set(next)
-      lastBatch.set(upto)
-      // the restored state is a compaction point: re-snapshotting one
-      // batch later would rewrite the table an equivalent snapshot (or
-      // folded log) already covers
-      lastCompact = upto
-      old.unpersist()
-    }
+    def current: DataFrame = core.state
 
     /** Serve one micro-batch of query vectors (vec_id, embedding) against
-      * the index and append the answers; re-delivered batch ids are
-      * dropped. Returns whether the batch was applied.
+      * the index and append the answers; returns whether the batch was
+      * applied.
       */
-    def serve(batchId: Long, index: Index, queries: DataFrame): Boolean = synchronized {
-      if (batchId <= lastBatch.get()) return false
-      val old = ref.get()
-      val delta = materialize {
-        if (queries.isEmpty) old.limit(0)
-        else Similarity.ivfTopK(
-            index.emb, queries, index.centroids, index.k, index.nprobe)
-          .select(col("query_id"), col("neighbor_id"), col("score"), col("rank"))
-      }
-      // durable: the delta commits BEFORE the batch is acknowledged
-      durable.foreach(dir => SnapshotStore.writeDelta(spark, dir, delta, batchId))
-      if (!delta.isEmpty) {
-        val next = materialize(old.unionByName(delta))
-        ref.set(next)
-        old.unpersist()
-      }
-      // cadence check OUTSIDE the non-empty branch (the PhashStream idle
-      // lesson): a quiet stream still accumulates guard deltas
-      durable.foreach { dir =>
-        if (batchId >= lastCompact + compactEvery) {
-          SnapshotStore.write(spark, dir, ref.get(), batchId,
-            singleFile = false)
-          SnapshotStore.pruneDeltas(spark, dir, batchId)
-          lastCompact = batchId
+    def serve(batchId: Long, index: Index, queries: DataFrame): Boolean =
+      core(batchId) { old =>
+        val delta = materialize {
+          if (queries.isEmpty) old.limit(0)
+          else answers(Similarity.ivfTopK(
+            index.emb, queries, index.centroids, index.k, index.nprobe))
         }
+        Step(if (delta.isEmpty) old else materialize(old.unionByName(delta)),
+          Seq(delta))
       }
-      delta.unpersist()
-      lastBatch.set(batchId)
-      true
-    }
   }
 
   object AnswerStore {
-    /** Rebuild a durable store from `dir` — the restart path: the newest
-      * complete full snapshot (if compaction has run) unioned with the
-      * deltas after it; a missing/empty `dir` restores a cold store.
+    /** Rebuild a durable store from `dir` — the restart path,
+      * [[BatchStore.restore]]; a missing/empty `dir` restores a cold store.
       */
     def restore(spark: SparkSession, dir: String,
-        compactEvery: Int = 64): AnswerStore = {
-      val store = new AnswerStore(spark, emptyAnswers(spark), Some(dir),
-        compactEvery)
-      val cols = Seq(col("query_id"), col("neighbor_id"), col("score"),
-        col("rank"))
-      val snap = SnapshotStore.newest(spark, dir)
-      val snapId = snap.map(_._1).getOrElse(-1L)
-      val deltas = SnapshotStore.deltaIds(spark, dir).filter(_._1 > snapId)
-      val parts = snap.map(_._2.select(cols: _*)).toSeq ++
-        (if (deltas.nonEmpty)
-          Seq(spark.read.parquet(deltas.map(_._2.toString): _*)
-            .select(cols: _*))
-        else Seq.empty)
-      if (parts.nonEmpty)
-        store.seed(parts.reduce(_ unionAll _),
-          math.max(snapId, deltas.lastOption.map(_._1).getOrElse(-1L)))
-      store
-    }
+        compactEvery: Int = 64): AnswerStore =
+      new AnswerStore(spark, emptyAnswers(spark), Some(dir), compactEvery)
+        .tap(_.core.restore((_, t) => materialize(answers(t.head)),
+          (s, d) => materialize(s.unionByName(answers(d.head)))))
   }
+
+  private def answers(df: DataFrame): DataFrame =
+    df.select(col("query_id"), col("neighbor_id"), col("score"), col("rank"))
 
   /** An empty cold-start answer table with the store's schema. */
   def emptyAnswers(spark: SparkSession): DataFrame = {
@@ -190,9 +127,5 @@ object AnnServeStream {
     */
   def run(queries: DataFrame, store: AnswerStore, index: Index,
           checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink(store, index))
-      .outputMode("update")
-      .start()
+    BatchStore.run(queries, checkpointDir)(sink(store, index))
 }

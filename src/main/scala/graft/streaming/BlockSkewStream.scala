@@ -1,10 +1,11 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicReference
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming candidate-pressure monitor — the unbounded twin of
   * [[graft.operators.Dedup.blockSkew]]: a running census of the hottest
@@ -30,63 +31,41 @@ import org.apache.spark.storage.StorageLevel
   */
 object BlockSkewStream {
 
-  /** Folded block-key counts across micro-batches. When `durable`
-    * carries a snapshot directory, every applied batch writes the merged
-    * table BEFORE the batch is acknowledged, so a driver restart
-    * rebuilds the exact folded state via [[SkewStore.restore]] and
-    * checkpoint-replayed batches drop on the monotone guard — the
-    * [[CmsStream.SketchStore]] durability shape.
+  /** Folded block-key counts across micro-batches, under the
+    * [[BatchStore]] contract; with `durable` every applied batch
+    * snapshots the merged table, restored by [[SkewStore.restore]].
     */
   final class SkewStore(
       spark: SparkSession, n: Int = 3, durable: Option[String] = None) {
     import spark.implicits._
 
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count()
-      cut
-    }
-
-    private val countsRef = new AtomicReference[DataFrame](materialize(
-      Seq.empty[(Int, Long, Long)].toDF("blk", "blk_val", "n_members")))
-    @volatile private var lastBatch = -1L
-
-    private[streaming] def seed(df: DataFrame, upto: Long): Unit = synchronized {
-      val nc = materialize(df.select(col("blk").cast("int").as("blk"),
-        col("blk_val"), col("n_members")))
-      val oc = countsRef.get()
-      countsRef.set(nc)
-      lastBatch = upto
-      oc.unpersist()
-    }
+    private val core = new BatchStore[DataFrame](materialize(
+      Seq.empty[(Int, Long, Long)].toDF("blk", "blk_val", "n_members")),
+      Seq(_), durable.map(BatchStore.Log(spark, _)))
 
     /** The monitor read: the batch operator's projection + top-N over
       * the folded counts.
       */
     def current(topN: Int = 20): DataFrame =
-      graft.operators.Dedup.blockSkewOf(countsRef.get(), topN)
+      graft.operators.Dedup.blockSkewOf(core.state, topN)
 
     /** The raw folded count table, for spec equality checks. */
-    private[graft] def counts: DataFrame = countsRef.get()
+    private[graft] def counts: DataFrame = core.state
 
     /** Fold one micro-batch of (doc_id, text) documents: fingerprint +
       * block keys + count via the shared batch stage, then keyed sum
-      * into the held table. Single-writer synchronized, monotone
-      * batch-id guard (at-least-once delivery folds each batch exactly
-      * once).
+      * into the held table.
       */
-    def merge(batch: DataFrame, batchId: Long): Boolean = synchronized {
-      if (batchId <= lastBatch) return false
+    def merge(batch: DataFrame, batchId: Long): Boolean = core(batchId) { old =>
       // the per-batch fingerprint stage registers shingle caches; scope
       // the release so exactly THIS batch's caches drop once the fold is
       // materialized and lineage-cut — a global uncacheAll() here would
       // also purge caches belonging to a co-resident dedup pipeline in
       // the same session (e.g. the DedupIndex ingest this monitor guards)
-      val nc = graft.operators.Dedup.releasingScoped {
+      Step(graft.operators.Dedup.releasingScoped {
         val bc = graft.operators.Dedup
           .blockPressure(batch, "doc_id", "text", n)
-        val merged = countsRef.get().as("o")
+        materialize(old.as("o")
           .join(bc.as("b"),
             col("o.blk") === col("b.blk") && col("o.blk_val") === col("b.blk_val"),
             "full_outer")
@@ -94,31 +73,19 @@ object BlockSkewStream {
             coalesce(col("o.blk"), col("b.blk")).as("blk"),
             coalesce(col("o.blk_val"), col("b.blk_val")).as("blk_val"),
             (coalesce(col("o.n_members"), lit(0L)) +
-              coalesce(col("b.n_members"), lit(0L))).as("n_members"))
-        materialize(merged)
-      }
-      // durable: snapshot BEFORE acknowledging, so a crash between write
-      // and ack only re-folds a batch the guard then drops
-      durable.foreach(dir => SnapshotStore.write(spark, dir, nc, batchId))
-      val oc = countsRef.get()
-      countsRef.set(nc)
-      lastBatch = batchId
-      oc.unpersist()
-      true
+              coalesce(col("b.n_members"), lit(0L))).as("n_members")))
+      })
     }
   }
 
   object SkewStore {
-    /** Rebuild a durable store from `dir`'s newest complete snapshot —
-      * the restart path; a missing/empty `dir` restores a cold store.
+    /** Rebuild a durable store from `dir` — the restart path; a
+      * missing/empty `dir` restores a cold store.
       */
-    def restore(spark: SparkSession, dir: String, n: Int = 3): SkewStore = {
-      val store = new SkewStore(spark, n, Some(dir))
-      SnapshotStore.newest(spark, dir).foreach { case (upto, df) =>
-        store.seed(df, upto)
-      }
-      store
-    }
+    def restore(spark: SparkSession, dir: String, n: Int = 3): SkewStore =
+      new SkewStore(spark, n, Some(dir)).tap(_.core.restore((_, t) =>
+        materialize(t.head.select(col("blk").cast("int").as("blk"),
+          col("blk_val"), col("n_members")))))
   }
 
   /** `(batch, batchId) => Unit` for `writeStream.foreachBatch`. */

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicReference
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming Poisson-bootstrap CI — the unbounded twin of
   * [[graft.operators.Splits.bootstrapCiMean]]: the error bar on a live
@@ -28,19 +29,16 @@ import org.apache.spark.storage.StorageLevel
   * code — so EngineSpec pins `current` ≡ `bootstrapCiMean(all delivered
   * rows)` row-for-row under any split.
   *
-  * Exactly-once accounting: partial sums are not idempotent, so the
-  * monotone batch-id guard drops re-deliveries ([[CmsStream.SketchStore]]
-  * discipline).
+  * Partial sums are not idempotent, so exactly-once rests on the
+  * [[BatchStore]] guard.
   */
 object BootstrapStream {
 
-  /** Running replica partials + exact totals for one monitored measure.
-    * When `durable` carries a snapshot directory, every applied batch
-    * writes BOTH state tables as one multi-table snapshot
-    * ([[SnapshotStore.writeMulti]] — complete iff both tables landed, so
-    * a crash mid-snapshot falls back to the previous one and the gap
-    * replays on the guard) BEFORE the batch is acknowledged. State is
-    * B+1 rows — KBs. Restore via [[BootstrapStore.restore]].
+  /** Running replica partials + exact totals for one monitored measure,
+    * under the [[BatchStore]] contract. With `durable` every applied
+    * batch snapshots BOTH tables as one multi-table snapshot (complete
+    * iff both landed; B+1 rows — KBs), restored by
+    * [[BootstrapStore.restore]].
     */
   final class BootstrapStore(spark: SparkSession, idCol: String,
       valCol: String, b: Int, alphaPpm: Long = 50000L,
@@ -48,59 +46,33 @@ object BootstrapStream {
     require(b >= 4, s"need at least 4 replicas: $b")
     import spark.implicits._
 
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count() // force now: a failed merge must fail BEFORE the swap
-      cut
-    }
+    private def partials(df: DataFrame) =
+      df.select(col("j"), col("sw"), col("swx").cast("decimal(38,0)").as("swx"))
+    private def totals(df: DataFrame) =
+      df.select(col("n"), col("sx").cast("decimal(38,0)").as("sx"))
 
-    private val partialsRef = new AtomicReference[DataFrame](materialize(
-      Seq.empty[(Int, Long, BigDecimal)].toDF("j", "sw", "swx")
-        .select(col("j"), col("sw"), col("swx").cast("decimal(38,0)"))))
-    private val totalsRef = new AtomicReference[DataFrame](materialize(
-      Seq((0L, BigDecimal(0))).toDF("n", "sx")
-        .select(col("n"), col("sx").cast("decimal(38,0)"))))
-    @volatile private var lastBatch = -1L
+    private val core = new BatchStore[(DataFrame, DataFrame)](
+      (materialize(partials(Seq.empty[(Int, Long, BigDecimal)].toDF("j", "sw", "swx"))),
+        materialize(totals(Seq((0L, BigDecimal(0))).toDF("n", "sx")))),
+      s => Seq(s._1, s._2),
+      durable.map(BatchStore.Log(spark, _, tables = Seq("partials", "totals"))))
 
-    private[streaming] def seed(partials: DataFrame, totals: DataFrame,
-        upto: Long): Unit = synchronized {
-      val nP = materialize(partials.select(col("j"), col("sw"),
-        col("swx").cast("decimal(38,0)").as("swx")))
-      val nT = materialize(totals.select(col("n"),
-        col("sx").cast("decimal(38,0)").as("sx")))
-      val (oP, oT) = (partialsRef.get(), totalsRef.get())
-      partialsRef.set(nP); totalsRef.set(nT)
-      lastBatch = upto
-      oP.unpersist(); oT.unpersist()
-    }
-
-    /** Fold one micro-batch in; replays drop on the guard. */
-    def merge(batch: DataFrame, batchId: Long): Boolean = synchronized {
-      if (batchId <= lastBatch) return false
-      val bp = graft.operators.Splits
-        .poissonReplicaPartials(batch, idCol, Nil, valCol, b)
-      val mergedP = partialsRef.get().unionAll(bp)
-        .groupBy(col("j"))
-        .agg(sum(col("sw")).as("sw"),
-          sum(col("swx")).cast("decimal(38,0)").as("swx"))
-      val bt = batch.agg(count(lit(1)).as("n"),
-        coalesce(sum(col(valCol).cast("long")).cast("decimal(38,0)"),
-          lit(0).cast("decimal(38,0)")).as("sx"))
-      val mergedT = totalsRef.get().unionAll(bt)
-        .agg(sum(col("n")).as("n"),
-          sum(col("sx")).cast("decimal(38,0)").as("sx"))
-      val nextP = materialize(mergedP)
-      val nextT = materialize(mergedT)
-      // durable: both tables snapshot atomically BEFORE acknowledging
-      durable.foreach(dir => SnapshotStore.writeMulti(spark, dir,
-        Seq("partials" -> nextP, "totals" -> nextT), batchId))
-      val (oldP, oldT) = (partialsRef.get(), totalsRef.get())
-      partialsRef.set(nextP)
-      totalsRef.set(nextT)
-      lastBatch = batchId
-      oldP.unpersist(); oldT.unpersist()
-      true
+    /** Fold one micro-batch in. */
+    def merge(batch: DataFrame, batchId: Long): Boolean = core(batchId) {
+      case (oldP, oldT) =>
+        val bp = graft.operators.Splits
+          .poissonReplicaPartials(batch, idCol, Nil, valCol, b)
+        val mergedP = oldP.unionAll(bp)
+          .groupBy(col("j"))
+          .agg(sum(col("sw")).as("sw"),
+            sum(col("swx")).cast("decimal(38,0)").as("swx"))
+        val bt = batch.agg(count(lit(1)).as("n"),
+          coalesce(sum(col(valCol).cast("long")).cast("decimal(38,0)"),
+            lit(0).cast("decimal(38,0)")).as("sx"))
+        val mergedT = oldT.unionAll(bt)
+          .agg(sum(col("n")).as("n"),
+            sum(col("sx")).cast("decimal(38,0)").as("sx"))
+        Step((materialize(mergedP), materialize(mergedT)))
     }
 
     /** `(b_reps, n_rows, mean_ppm, lo_ppm, hi_ppm)` over everything
@@ -108,12 +80,13 @@ object BootstrapStream {
       * derived at read time from the additive state.
       */
     def current: DataFrame = {
-      val exact = totalsRef.get().select(col("n").as("n_rows"),
+      val (p, t) = core.state
+      val exact = t.select(col("n").as("n_rows"),
         (signum(col("sx")).cast("long") *
           expr("(CAST(1000000 AS DECIMAL(38,0)) * abs(sx)) div n"))
           .as("mean_ppm"))
       val ci = graft.operators.Splits
-        .ciFromReplicaPartials(partialsRef.get(), b, alphaPpm)
+        .ciFromReplicaPartials(p, b, alphaPpm)
       exact.crossJoin(broadcast(ci))
         .select(lit(b.toLong).as("b_reps"), col("n_rows"), col("mean_ppm"),
           col("lo_ppm"), col("hi_ppm"))
@@ -121,19 +94,14 @@ object BootstrapStream {
   }
 
   object BootstrapStore {
-    /** Rebuild a durable store from `dir`'s newest complete snapshot —
-      * the restart path; a missing/empty `dir` restores a cold store.
+    /** Rebuild a durable store from `dir` — the restart path; a
+      * missing/empty `dir` restores a cold store.
       */
     def restore(spark: SparkSession, dir: String, idCol: String,
-        valCol: String, b: Int, alphaPpm: Long = 50000L): BootstrapStore = {
-      val store = new BootstrapStore(spark, idCol, valCol, b, alphaPpm,
-        Some(dir))
-      SnapshotStore.newestMulti(spark, dir, Seq("partials", "totals"))
-        .foreach { case (upto, tables) =>
-          store.seed(tables("partials"), tables("totals"), upto)
-        }
-      store
-    }
+        valCol: String, b: Int, alphaPpm: Long = 50000L): BootstrapStore =
+      new BootstrapStore(spark, idCol, valCol, b, alphaPpm, Some(dir))
+        .tap(s => s.core.restore((_, t) =>
+          (materialize(s.partials(t(0))), materialize(s.totals(t(1))))))
   }
 
   /** `(batch, batchId) => Unit` for `writeStream.foreachBatch`. */
@@ -145,9 +113,5 @@ object BootstrapStream {
     */
   def run(rows: DataFrame, store: BootstrapStore, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink(store))
-      .outputMode("update")
-      .start()
+    BatchStore.run(rows, checkpointDir)(sink(store))
 }

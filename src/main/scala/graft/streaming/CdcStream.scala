@@ -1,10 +1,11 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicReference
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming CDC compaction — latest record per key over an unbounded
   * change stream, the streaming twin of the `q_cdc_compact` batch row.
@@ -17,120 +18,76 @@ import org.apache.spark.storage.StorageLevel
   * `max(struct(ts, tiebreak, payload))` per key, and max is IDEMPOTENT,
   * commutative, and associative. That buys three things the counting
   * stores ([[CmsStream]], [[HeavyHittersStream]]) cannot have:
-  * no batch-id replay guard at all (re-applying a delivered batch
-  * re-takes a max that cannot move), batch boundaries that don't matter
+  * replay safety without the [[BatchStore]] guard (re-applying a
+  * delivered batch re-takes a max that cannot move; the guard only saves
+  * the work), batch boundaries that don't matter
   * (any partition of the stream into batches compacts to the same
   * table), and a merge that is the SAME map-side-combinable aggregate
   * the batch operator uses — per batch: argmax within the batch (hot
   * keys collapse per task before the exchange), then a keyed FULL OUTER
   * against the held table taking the struct-greatest side.
   *
-  * State is one row per live key held as a lineage-cut table (the
-  * [[ComponentsStream.LabelStore]] discipline: materialize fully, swap
-  * atomically, failed merges keep the old snapshot) — corpus-scale state
-  * lives in a table, never in driver collections.
+  * State is one row per live key held as a lineage-cut table —
+  * corpus-scale state lives in a table, never in driver collections.
   */
 object CdcStream {
 
   /** Compacted (key → latest struct) table held across micro-batches.
     * Schema: keyCols ++ (last: struct(ts, tiebreak, payload...)).
     *
-    * Durability (with `durable` set): the table is one row per live key
-    * — corpus-key-sized — so FULL snapshots write PARTITIONED (no
-    * single-task funnel) and only every `snapshotEvery`-th applied
-    * batch; every OTHER applied batch writes its O(batch-keys) argmax
-    * rows as a `delta=<batchId>` log entry, still BEFORE the checkpoint
-    * commits it. The gap cannot be left to replay — structured streaming
-    * re-delivers only the single uncommitted batch, never committed
-    * ones — so [[CompactStore.restore]] folds the newest snapshot plus
-    * all later deltas (greatest is associative-commutative, so the union
-    * pre-folds to one per-key argmax); a full snapshot prunes the deltas
-    * it supersedes.
+    * Durability (with `durable` set) follows the [[BatchStore]] contract:
+    * the table is one row per live key — corpus-key-sized — so full
+    * snapshots are written partitioned, and only every `snapshotEvery`-th
+    * applied batch (the first batch always snapshots); every other
+    * applied batch logs its O(batch-keys) argmax rows as a delta. Restore
+    * pre-folds the later deltas to one argmax per key and merges them in.
     */
   final class CompactStore(spark: SparkSession, keyCols: Seq[String],
       initial: DataFrame, durable: Option[String] = None,
       snapshotEvery: Int = 1) {
     require(keyCols.nonEmpty, "need at least one key column")
     require(snapshotEvery >= 1, s"snapshotEvery must be >= 1: $snapshotEvery")
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count() // force now: a failed merge must fail BEFORE the swap
-      cut
-    }
-    private val ref = new AtomicReference[DataFrame](materialize(initial))
-    @volatile private var lastSnap = Long.MinValue
+    private val core = new BatchStore[DataFrame](materialize(initial), Seq(_),
+      durable.map(dir => BatchStore.Log(spark, dir, deltas = Some(dir),
+        every = snapshotEvery, origin = Long.MinValue)))
 
     /** The current compacted table — always fully materialized. */
-    def current: DataFrame = ref.get()
+    def current: DataFrame = core.state
 
-    private[streaming] def seed(df: DataFrame, upto: Long): Unit = synchronized {
-      val next = materialize(df)
-      val old = ref.get()
-      ref.set(next)
-      lastSnap = upto
-      old.unpersist()
-    }
+    private def fold(old: DataFrame, batchCompact: DataFrame): DataFrame =
+      materialize(old.as("o")
+        .join(batchCompact.as("b"),
+          keyCols.map(k => col(s"o.$k") === col(s"b.$k")).reduce(_ && _),
+          "full_outer")
+        .select(
+          keyCols.map(k => coalesce(col(s"o.$k"), col(s"b.$k")).as(k)) :+
+            greatest(col("o.last"), col("b.last")).as("last"): _*))
 
-    /** Merge one micro-batch of per-batch argmaxes; idempotent, so
-      * at-least-once replay needs no guard. `batchId` (when ≥ 0) drives
-      * the durable snapshot cadence.
+    /** Merge one micro-batch of per-batch argmaxes. Re-merging is
+      * idempotent anyway; an id ≥ 0 is guarded and committed, the default
+      * −1 is an unguarded ad-hoc merge.
       */
-    def merge(batchCompact: DataFrame, batchId: Long = -1L): Unit = synchronized {
-      val old = ref.get()
-      if (!batchCompact.isEmpty) {
-        val merged = old.as("o")
-          .join(batchCompact.as("b"),
-            keyCols.map(k => col(s"o.$k") === col(s"b.$k")).reduce(_ && _),
-            "full_outer")
-          .select(
-            keyCols.map(k => coalesce(col(s"o.$k"), col(s"b.$k")).as(k)) :+
-              greatest(col("o.last"), col("b.last")).as("last"): _*)
-        val next = materialize(merged)
-        if (batchId >= 0) durable.foreach { dir =>
-          if (lastSnap == Long.MinValue || batchId >= lastSnap + snapshotEvery) {
-            SnapshotStore.write(spark, dir, next, batchId, singleFile = false)
-            SnapshotStore.pruneDeltas(spark, dir, batchId)
-            lastSnap = batchId
-          } else {
-            // off-cadence batches persist their O(batch-keys) argmax rows
-            // as a delta BEFORE the checkpoint commits the batch —
-            // structured streaming never re-delivers committed batches,
-            // so an unwritten gap would be lost, not replayed
-            SnapshotStore.writeDelta(spark, dir, batchCompact, batchId)
-          }
-        }
-        ref.set(next)
-        old.unpersist()
-      }
+    def merge(batchCompact: DataFrame, batchId: Long = -1L): Unit = {
+      core(batchId)(old =>
+        if (batchCompact.isEmpty) Step(old, commit = false)
+        else Step(fold(old, batchCompact), Seq(batchCompact)))
+      ()
     }
   }
 
   object CompactStore {
-    /** Rebuild a durable store from `dir`'s newest complete snapshot —
-      * the restart path; a missing/empty `dir` restores the cold
+    /** Rebuild a durable store from `dir` — the restart path,
+      * [[BatchStore.restore]]; a missing or empty `dir` restores the cold
       * `initial` table.
       */
     def restore(spark: SparkSession, dir: String, keyCols: Seq[String],
-        initial: DataFrame, snapshotEvery: Int = 1): CompactStore = {
-      val store = new CompactStore(spark, keyCols, initial, Some(dir),
-        snapshotEvery)
-      val snap = SnapshotStore.newest(spark, dir)
-      val snapId = snap.map(_._1).getOrElse(Long.MinValue)
-      snap.foreach { case (upto, df) => store.seed(df, upto) }
-      // fold every delta NEWER than the full snapshot back in: these are
-      // committed batches the checkpoint will never re-deliver. greatest
-      // is associative-commutative, so the union pre-folds to one
-      // per-key argmax and merges in a single pass; a stale delta that
-      // survives past its superseding snapshot re-merges as a no-op.
-      val later = SnapshotStore.deltaIds(spark, dir)
-        .filter(d => snapId == Long.MinValue || d._1 > snapId)
-      if (later.nonEmpty) {
-        store.merge(spark.read.parquet(later.map(_._2.toString): _*)
-          .groupBy(keyCols.map(col): _*).agg(max(col("last")).as("last")))
-      }
-      store
-    }
+        initial: DataFrame, snapshotEvery: Int = 1): CompactStore =
+      new CompactStore(spark, keyCols, initial, Some(dir), snapshotEvery)
+        .tap(s => s.core.restore((_, t) => materialize(t.head), (st, d) =>
+          // greatest is associative-commutative: the union of deltas
+          // pre-folds to one argmax per key and merges in one pass
+          s.fold(st, d.head.groupBy(keyCols.map(col): _*)
+            .agg(max(col("last")).as("last")))))
   }
 
   /** The batch-local compaction (shared with the batch operator's shape):
@@ -152,9 +109,6 @@ object CdcStream {
   def run(changes: DataFrame, store: CompactStore, checkpointDir: String,
       keyCols: Seq[String], orderCols: Seq[String],
       payloadCols: Seq[String]): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink(store, keyCols, orderCols, payloadCols))
-      .outputMode("update")
-      .start()
+    BatchStore.run(changes, checkpointDir)(
+      sink(store, keyCols, orderCols, payloadCols))
 }

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.TextAnalysis
+import graft.streaming.BatchStore.Step
 
 /** Streaming Count-Min Sketch — running token-frequency estimates over an
   * unbounded document stream, the streaming twin of
@@ -24,76 +25,39 @@ import graft.operators.TextAnalysis
   * sketch is the entire point of CMS (the alternative, exact distinct-key
   * counting state, is what stops fitting); d·w longs serve any probe rate.
   *
-  * Exactly-once accounting under `foreachBatch`'s at-least-once replay:
-  * counting is NOT idempotent (re-adding a delivered batch double-counts —
-  * unlike [[ComponentsStream]]'s min-label merge), so the store keeps the
-  * last applied batch id and drops re-deliveries at or below it — the
-  * standard idempotent-sink discipline ([[IdempotentSink]]), applied to a
-  * monotone batch counter instead of a key overwrite.
+  * Counting is NOT idempotent (re-adding a delivered batch double-counts),
+  * so exactly-once rests on the [[BatchStore]] guard.
   */
 object CmsStream {
 
-  /** Running counter map (key `j·width + b`), merged per micro-batch.
-    *
-    * Concurrency contract: [[add]] is `synchronized` — the batch-id guard
-    * plus the read-modify-write merge must be one atomic step, or two
-    * writers (e.g. two queries wired to one store) could both pass the
-    * guard and double-count, or interleave merges and lose one. The
-    * expected topology is still ONE streaming query per store
-    * (`foreachBatch` invokes the sink serially); the lock makes the
-    * multi-writer misuse safe instead of silently wrong. Reads
-    * ([[counters]], [[estimates]]) stay lock-free on the immutable map.
-    *
-    * Restart durability: with `durable = Some((spark, dir))`, every
-    * applied batch writes the MERGED counter table (d·w rows — bounded,
-    * so the write is a few KB) plus the applied batch id to
-    * `dir/upto=<batchId>` BEFORE the in-memory swap and before the sink
-    * returns — i.e. before Structured Streaming's checkpoint commits the
-    * batch. A driver restart therefore cannot lose an acknowledged
-    * batch: [[SketchStore.restore]] rebuilds the store from the newest
-    * complete snapshot (its `_SUCCESS` marker gates completeness), and
-    * any batch the checkpoint replays at or below the restored id is
-    * dropped by the monotone guard — the counters and the checkpoint can
-    * never disagree. Older snapshots are pruned to the last two. Without
-    * `durable` the store is memory-only (the previous behavior, fine for
-    * probes over a replayable source).
+  /** Running counter map (key `j·width + b`), merged per micro-batch under
+    * the [[BatchStore]] exactly-once contract. With `durable =
+    * Some((spark, dir))` every applied batch snapshots the merged counter
+    * table (d·w rows — a few KB) to `dir/upto=<batchId>`; reads
+    * ([[counters]], [[estimates]]) are lock-free on the immutable map.
     */
   final class SketchStore(val width: Int, val depth: Int,
       durable: Option[(SparkSession, String)] = None) {
     require(width >= 2 && depth >= 1, s"need width>=2, depth>=1: $width/$depth")
-    private val ref = new AtomicReference[Map[Long, Long]](Map.empty)
-    private val lastBatch = new AtomicLong(-1L)
+    private val core = new BatchStore[Map[Long, Long]](Map.empty, _ => Nil,
+      durable.map { case (spark, dir) => BatchStore.Log(spark, dir) },
+      durable.map { case (spark, _) => (m: Map[Long, Long]) =>
+        import spark.implicits._
+        Seq(m.toSeq.toDF("cell", "n"))
+      })
 
-    def counters: Map[Long, Long] = ref.get()
+    def counters: Map[Long, Long] = core.state
 
     /** The last applied batch id (−1 when nothing applied yet). */
-    def lastApplied: Long = lastBatch.get()
+    def lastApplied: Long = core.lastApplied
 
-    private[streaming] def seed(counters: Map[Long, Long], upto: Long): Unit = {
-      ref.set(counters)
-      lastBatch.set(upto)
-    }
-
-    /** Key-wise add one batch's collected cells; re-delivered batch ids
-      * (≤ the last applied) are dropped, so replay never double-counts.
-      * Returns whether the batch was applied. Atomic w.r.t. concurrent
-      * `add` calls (see class note). When durable, the snapshot write
-      * happens FIRST — a failed write fails the batch (so the checkpoint
-      * does not commit it and it replays), never the other way around.
+    /** Key-wise add one batch's collected cells; `cells` is evaluated only
+      * once the batch passes the guard. Returns whether it was applied.
       */
-    def add(batchId: Long, cells: Map[Long, Long]): Boolean = synchronized {
-      if (batchId <= lastBatch.get()) return false
-      val cur = ref.get()
-      val merged = cells.foldLeft(cur) { case (m, (k, n)) =>
+    def add(batchId: Long, cells: => Map[Long, Long]): Boolean =
+      core(batchId)(cur => Step(cells.foldLeft(cur) { case (m, (k, n)) =>
         m.updated(k, m.getOrElse(k, 0L) + n)
-      }
-      durable.foreach { case (spark, dir) =>
-        SketchStore.writeSnapshot(spark, dir, merged, batchId)
-      }
-      ref.set(merged)
-      lastBatch.set(batchId)
-      true
-    }
+      }))
 
     /** Row-local probe against the CURRENT merged counters — identical
       * estimation semantics to the batch operator (min over rows, absent
@@ -104,29 +68,14 @@ object CmsStream {
   }
 
   object SketchStore {
-    private[streaming] def writeSnapshot(spark: SparkSession, dir: String,
-        counters: Map[Long, Long], batchId: Long): Unit = {
-      import spark.implicits._
-      SnapshotStore.write(spark, dir, counters.toSeq.toDF("cell", "n"),
-        batchId)
-    }
-
-    /** Rebuild a durable store from `dir`'s newest complete snapshot —
-      * the restart path. The restored store keeps writing snapshots to
-      * the same `dir`; checkpoint-replayed batches at or below the
-      * restored id are dropped by the monotone guard. A missing or empty
-      * `dir` restores a cold store (first run). `dir` may be any
-      * Spark-writable scheme ([[SnapshotStore]]).
+    /** Rebuild a durable store from `dir` (any Spark-writable scheme) —
+      * the restart path, [[BatchStore.restore]]; a missing or empty `dir`
+      * restores a cold store.
       */
     def restore(spark: SparkSession, dir: String,
-        width: Int, depth: Int): SketchStore = {
-      val store = new SketchStore(width, depth, Some((spark, dir)))
-      SnapshotStore.newest(spark, dir).foreach { case (upto, df) =>
-        store.seed(df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
-          upto)
-      }
-      store
-    }
+        width: Int, depth: Int): SketchStore =
+      new SketchStore(width, depth, Some((spark, dir))).tap(_.core.restore(
+        (_, t) => t.head.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
   }
 
   /** `(batch, batchId) => Unit` for `writeStream.foreachBatch`: run the
@@ -144,9 +93,5 @@ object CmsStream {
     */
   def run(docs: DataFrame, store: SketchStore, checkpointDir: String,
           textCol: String = "text"): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink(store, textCol))
-      .outputMode("update")
-      .start()
+    BatchStore.run(docs, checkpointDir)(sink(store, textCol))
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicReference
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Dedup
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming incremental connected components — the daily-refresh dedup
   * deployment shape, composed from two verified pieces: micro-batches of
@@ -27,19 +25,13 @@ import graft.operators.Dedup
   *
   * Scale shape per batch: exactly [[Dedup.componentsIncremental]] — the
   * iterative closure runs on the O(delta) contracted label graph, the
-  * labels table is touched by ONE broadcast-mapped scan. The store cuts
-  * lineage each swap (checkpoint-free `createDataFrame(rdd, schema)`), so
-  * batch N's plan never re-derives batches 0..N-1, and persists the new
-  * labels BEFORE unpersisting the old so a concurrent reader never sees a
-  * cold table.
+  * labels table is touched by ONE broadcast-mapped scan; swap, lineage
+  * cut and failure semantics are the [[BatchStore]] contract.
   *
-  * Failure/replay contract (the `foreachBatch` at-least-once reality):
-  * merging is IDEMPOTENT — re-delivering a batch whose pairs are already
+  * Merging is IDEMPOTENT — re-delivering a batch whose pairs are already
   * reflected in the labels is a no-op, because the contracted delta graph
   * then collapses onto existing labels and the min-label mapping is the
-  * identity (tested). A merge that THROWS leaves the previous labels
-  * intact (the swap happens only after the new table materializes) — same
-  * keep-old-snapshot semantics as the reference's fixed refresh loop.
+  * identity (tested).
   */
 object ComponentsStream {
 
@@ -47,92 +39,44 @@ object ComponentsStream {
     * initial [[Dedup.components]] fixpoint (or an empty (doc_id,
     * component) frame for a cold start).
     *
-    * Durability: with `snapshotDir` set, every applied batch persists
-    * BEFORE the checkpoint commits it (write-before-commit). Unlike the
-    * KB-bounded sketch stores the labels table is CORPUS-sized, so full
-    * snapshots (`upto=<batchId>`, partitioned — no coalesce(1) funnel,
-    * newest-two retention) happen only every `snapshotEvery`-th applied
-    * batch; BETWEEN them each batch writes its O(batch) PAIR set as a
-    * `delta=<batchId>` log entry instead. The gap is NOT left to replay:
-    * structured streaming re-delivers only the single uncommitted batch,
-    * so committed-but-unsnapshotted batches would otherwise be lost —
-    * restore therefore folds the newest full snapshot plus ALL later
-    * pair deltas through ONE [[Dedup.componentsIncremental]] merge (the
-    * min-label algebra makes the union of deltas a legal single delta).
-    * A full snapshot prunes the deltas it supersedes.
-    * Empty batches never write (replaying a skipped empty batch is
-    * trivially idempotent). Replayed batches otherwise drop on the
-    * restored monotone guard.
+    * Durability: with `snapshotDir` set the store restores from it at
+    * construction and commits every applied batch under the
+    * [[BatchStore]] contract. The labels table is CORPUS-sized, so full
+    * snapshots (partitioned) happen only every `snapshotEvery`-th applied
+    * batch; between them each batch logs its O(batch) PAIR set as a
+    * delta, and restore folds the snapshot plus all later pair deltas
+    * through ONE [[Dedup.componentsIncremental]] merge (the min-label
+    * algebra makes the union of deltas a legal single delta). Empty
+    * batches never write (replaying a skipped empty batch is trivially
+    * idempotent).
     */
   final class LabelStore(spark: SparkSession, initial: DataFrame,
       snapshotDir: Option[String] = None, snapshotEvery: Int = 1) {
     require(snapshotEvery >= 1, s"snapshotEvery must be >= 1: $snapshotEvery")
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count() // force now: a failed merge must fail BEFORE the swap
-      cut
-    }
-
-    private val restoredSnap =
-      snapshotDir.flatMap(d => SnapshotStore.newest(spark, d))
-    private val restoredSnapId = restoredSnap.map(_._1).getOrElse(-1L)
-    // pair deltas NEWER than the newest full snapshot: the committed
-    // batches a restart would otherwise lose (the checkpoint never
-    // re-delivers them)
-    private val laterDeltas = snapshotDir
-      .map(d => SnapshotStore.deltaIds(spark, d).filter(_._1 > restoredSnapId))
-      .getOrElse(Seq.empty)
-
-    private val ref = new AtomicReference[DataFrame](materialize {
-      val base = restoredSnap.map(_._2.select(col("doc_id"), col("component")))
-        .getOrElse(initial.select(col("doc_id"), col("component")))
-      if (laterDeltas.isEmpty) base
-      else Dedup.componentsIncremental(base,
-        spark.read.parquet(laterDeltas.map(_._2.toString): _*)
-          .select(col("doc_a"), col("doc_b")))
-    })
-    @volatile private var lastBatch =
-      math.max(restoredSnapId, laterDeltas.lastOption.map(_._1).getOrElse(-1L))
-    @volatile private var lastSnap = restoredSnapId
+    private def pairs(df: DataFrame) = df.select(col("doc_a"), col("doc_b"))
+    private val core = new BatchStore[DataFrame](
+      materialize(initial.select(col("doc_id"), col("component"))), Seq(_),
+      snapshotDir.map(d => BatchStore.Log(spark, d, deltas = Some(d),
+        every = snapshotEvery)))
+    core.restore((_, t) => materialize(t.head.select(col("doc_id"), col("component"))),
+      (s, d) => materialize(Dedup.componentsIncremental(s, pairs(d.head))))
 
     /** The current labels fixpoint (doc_id, component) — always a fully
       * materialized table, never a mid-merge view.
       */
-    def current: DataFrame = ref.get()
+    def current: DataFrame = core.state
 
     /** Merge one micro-batch of delta pairs (doc_a, doc_b); O(delta)
       * iterative work + one labels scan, then an atomic swap. `batchId`
-      * (when >= 0) drives the durable snapshot id and the replay guard;
-      * unidentified merges stay supported for ad-hoc callers.
+      * (when >= 0) is guarded and committed; unidentified merges stay
+      * supported for ad-hoc callers.
       */
-    def merge(deltaPairs: DataFrame, batchId: Long = -1L): Unit = synchronized {
-      if (batchId >= 0 && batchId <= lastBatch) return
-      val old = ref.get()
-      if (!deltaPairs.isEmpty) {
-        val pairsProj = deltaPairs.select(col("doc_a"), col("doc_b"))
-        val next = materialize(Dedup.componentsIncremental(old, pairsProj))
-        if (batchId >= 0) snapshotDir.foreach { d =>
-          if (batchId >= lastSnap + snapshotEvery) {
-            SnapshotStore.write(spark, d, next, batchId, singleFile = false)
-            SnapshotStore.pruneDeltas(spark, d, batchId)
-            lastSnap = batchId
-          } else {
-            // off-cadence batches still persist BEFORE the checkpoint
-            // commits them — as their O(batch) pair set, not the
-            // corpus-sized labels table
-            SnapshotStore.writeDelta(spark, d, pairsProj, batchId)
-          }
-        }
-        ref.set(next)
-        if (batchId >= 0) lastBatch = batchId
-        old.unpersist()
-      } else if (batchId >= 0) {
-        // empty batches only advance the in-memory guard: replaying a
-        // skipped empty batch after a restart is trivially idempotent,
-        // so no durable write is owed
-        lastBatch = batchId
-      }
+    def merge(deltaPairs: DataFrame, batchId: Long = -1L): Unit = {
+      core(batchId)(old =>
+        if (deltaPairs.isEmpty) Step(old, commit = false)
+        else Step(materialize(Dedup.componentsIncremental(old, pairs(deltaPairs))),
+          Seq(pairs(deltaPairs))))
+      ()
     }
   }
 
@@ -145,9 +89,5 @@ object ComponentsStream {
     */
   def run(pairs: DataFrame, store: LabelStore,
           checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    pairs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink(store))
-      .outputMode("update")
-      .start()
+    BatchStore.run(pairs, checkpointDir)(sink(store))
 }

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Dedup
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming cross-corpus decontamination — the streaming twin of
   * [[graft.operators.Dedup.crossJaccardPairs]]: training documents arrive
@@ -30,113 +30,55 @@ import graft.operators.Dedup
   * tiny by construction — a corpus where most pairs flag has bigger
   * problems than state size).
   *
-  * Exactly-once accounting under `foreachBatch`'s at-least-once replay:
-  * pair accumulation is NOT idempotent (re-appending a delivered batch
-  * duplicates its rows), so the store keeps the last applied batch id and
-  * drops re-deliveries at or below it — the [[CmsStream.SketchStore]]
-  * monotone-guard discipline, with [[ComponentsStream.LabelStore]]'s
-  * materialize-before-swap so a failed append keeps the previous table
-  * and lineage never re-derives old batches.
+  * Pair accumulation is NOT idempotent (re-appending a delivered batch
+  * duplicates its rows), so exactly-once rests on the [[BatchStore]]
+  * guard.
   */
 object ContaminationStream {
 
   /** Accumulated flagged pairs (train_id, eval_id, jaccard).
     *
-    * Durability (with `durable` set): the pair table is APPEND-ONLY
-    * (each train doc's verdict lands in exactly one batch), so each
-    * batch's new pairs persist as a [[SnapshotStore]] delta log —
-    * per-batch I/O is O(batch's pairs), never O(history) — written
-    * BEFORE the batch is acknowledged; a rebuilt store restores the
-    * union of complete deltas via [[PairStore.restore]] and replayed
-    * batches drop on the restored monotone guard (a torn delta is
-    * overwritten whole by its replay). Every batch writes a delta —
-    * even an empty one — so the guard itself is durable.
+    * Durability (with `durable` set), under the [[BatchStore]] contract:
+    * the pair table is APPEND-ONLY (each train doc's verdict lands in
+    * exactly one batch), so each batch commits its new pairs as a delta —
+    * per-batch I/O is O(batch's pairs), never O(history), and every batch
+    * writes one, even an empty one, so the guard itself is durable — and
+    * every `compactEvery`-th batch commits the accumulated table as a
+    * full snapshot instead, pruning the deltas it covers. Restore = the
+    * newest snapshot ∪ the deltas after it.
     */
   final class PairStore(spark: SparkSession, initial: DataFrame,
       durable: Option[String] = None, compactEvery: Int = 64) {
     require(compactEvery >= 1, s"compactEvery must be >= 1: $compactEvery")
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count() // force now: a failed append must fail BEFORE the swap
-      cut
-    }
-    private val ref = new AtomicReference[DataFrame](materialize(
-      initial.select(col("train_id"), col("eval_id"), col("jaccard"))))
-    private val lastBatch = new AtomicLong(-1L)
-    @volatile private var lastCompact = -1L
+    private val core = new BatchStore[DataFrame](materialize(flagged(initial)),
+      Seq(_), durable.map(dir => BatchStore.Log(spark, dir, deltas = Some(dir),
+        every = compactEvery)))
 
     /** The accumulated pairs — always fully materialized, never mid-swap. */
-    def current: DataFrame = ref.get()
+    def current: DataFrame = core.state
 
-    private[streaming] def seed(df: DataFrame, upto: Long): Unit = synchronized {
-      val next = materialize(
-        df.select(col("train_id"), col("eval_id"), col("jaccard")))
-      val old = ref.get()
-      ref.set(next)
-      lastBatch.set(upto)
-      lastCompact = upto // the restored state is a compaction point
-      old.unpersist()
-    }
-
-    /** Append one micro-batch's flagged pairs; re-delivered batch ids
-      * (≤ the last applied) are dropped so replay never duplicates rows.
-      * Returns whether the batch was applied.
+    /** Append one micro-batch's flagged pairs; returns whether the batch
+      * was applied.
       */
-    def add(batchId: Long, pairs: DataFrame): Boolean = synchronized {
-      if (batchId <= lastBatch.get()) return false
-      val old = ref.get()
-      val delta = materialize(
-        pairs.select(col("train_id"), col("eval_id"), col("jaccard")))
-      // durable: the delta commits BEFORE the batch is acknowledged
-      durable.foreach(dir => SnapshotStore.writeDelta(spark, dir, delta, batchId))
-      if (!delta.isEmpty) {
-        val next = materialize(old.unionAll(delta))
-        ref.set(next)
-        old.unpersist()
-      }
-      // periodic compaction, evaluated even on empty batches: fold the
-      // accumulated table into a full `upto=` snapshot and prune the
-      // deltas it supersedes, bounding restore-time listing/union cost
-      // for long-lived streams
-      durable.foreach { dir =>
-        if (batchId >= lastCompact + compactEvery) {
-          SnapshotStore.write(spark, dir, ref.get(), batchId,
-            singleFile = false)
-          SnapshotStore.pruneDeltas(spark, dir, batchId)
-          lastCompact = batchId
-        }
-      }
-      delta.unpersist()
-      lastBatch.set(batchId)
-      true
+    def add(batchId: Long, pairs: DataFrame): Boolean = core(batchId) { old =>
+      val delta = materialize(flagged(pairs))
+      Step(if (delta.isEmpty) old else materialize(old.unionAll(delta)), Seq(delta))
     }
   }
 
   object PairStore {
-    /** Rebuild a durable store from `dir` — the restart path: the newest
-      * complete full snapshot (if compaction has run) unioned with the
-      * deltas after it; a missing/empty `dir` restores a cold store.
+    /** Rebuild a durable store from `dir` — the restart path,
+      * [[BatchStore.restore]]; a missing/empty `dir` restores a cold store.
       */
     def restore(spark: SparkSession, dir: String,
-        compactEvery: Int = 64): PairStore = {
-      val store = new PairStore(spark, emptyPairs(spark), Some(dir),
-        compactEvery)
-      val cols = Seq(col("train_id"), col("eval_id"), col("jaccard"))
-      val snap = SnapshotStore.newest(spark, dir)
-      val snapId = snap.map(_._1).getOrElse(-1L)
-      val deltas = SnapshotStore.deltaIds(spark, dir).filter(_._1 > snapId)
-      val parts = snap.map(_._2.select(cols: _*)).toSeq ++
-        (if (deltas.nonEmpty)
-          Seq(spark.read.parquet(deltas.map(_._2.toString): _*)
-            .select(cols: _*))
-        else Seq.empty)
-      if (parts.nonEmpty)
-        store.seed(parts.reduce(_ unionAll _),
-          math.max(snapId, deltas.lastOption.map(_._1).getOrElse(-1L)))
-      store
-    }
+        compactEvery: Int = 64): PairStore =
+      new PairStore(spark, emptyPairs(spark), Some(dir), compactEvery)
+        .tap(_.core.restore((_, t) => materialize(flagged(t.head)),
+          (s, d) => materialize(s.unionAll(flagged(d.head)))))
   }
+
+  private def flagged(df: DataFrame): DataFrame =
+    df.select(col("train_id"), col("eval_id"), col("jaccard"))
 
   /** An empty cold-start pair table with the store's schema. */
   def emptyPairs(spark: SparkSession): DataFrame = {
@@ -160,9 +102,5 @@ object ContaminationStream {
   def run(trainDocs: DataFrame, evalDocs: DataFrame, store: PairStore,
           checkpointDir: String, n: Int = 3, tau: Double = 0.5)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    trainDocs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink(store, evalDocs, n, tau))
-      .outputMode("update")
-      .start()
+    BatchStore.run(trainDocs, checkpointDir)(sink(store, evalDocs, n, tau))
 }

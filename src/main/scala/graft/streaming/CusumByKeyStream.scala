@@ -1,10 +1,11 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicReference
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming PER-KEY CUSUM monitor — the keyed twin of [[CusumStream]]
   * and the unbounded form of
@@ -20,7 +21,7 @@ import org.apache.spark.storage.StorageLevel
   * those sums are ADDITIVE across any batching — so the only state is
   * the (key, bucket, v) table (per-key time-bounded, the batch
   * operator's contract), merged per batch by keyed FULL OUTER + sum
-  * behind a monotone batch-id guard. Reads derive the scan from the
+  * behind the [[BatchStore]] guard. Reads derive the scan from the
   * folded table via the SHARED batch operators, so streamed ≡ batch is
   * an algebraic identity, and late events simply add into their
   * (key, bucket) cell — a key's changepoint may legitimately move; no
@@ -28,36 +29,21 @@ import org.apache.spark.storage.StorageLevel
   */
 object CusumByKeyStream {
 
-  /** Per-(key, bucket) value sums across micro-batches; durability via
-    * the [[SnapshotStore]] write-before-ack discipline when `durable`
-    * names a snapshot directory.
+  /** Per-(key, bucket) value sums across micro-batches, under the
+    * [[BatchStore]] contract; with `durable` every applied batch
+    * snapshots the merged table.
     */
   final class KeyedCusumStore(spark: SparkSession,
       durable: Option[String] = None) {
 
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count()
-      cut
-    }
-
     // the state adopts the FIRST batch's key type (string user ids and
     // long ids both legal) — a cold store holds no frame rather than a
     // wrongly-typed empty one
-    private val sumsRef = new AtomicReference[DataFrame](null)
-    @volatile private var lastBatch = -1L
-
-    private[streaming] def seed(df: DataFrame, upto: Long): Unit = synchronized {
-      val nc = materialize(df.select(col("key"), col("bucket"), col("v")))
-      val oc = sumsRef.get()
-      sumsRef.set(nc)
-      lastBatch = upto
-      if (oc != null) oc.unpersist()
-    }
+    private val core = new BatchStore[DataFrame](null, Option(_).toSeq,
+      durable.map(BatchStore.Log(spark, _)))
 
     private def folded: DataFrame = {
-      val s = sumsRef.get()
+      val s = core.state
       require(s != null, "cold store: no batches folded yet")
       s
     }
@@ -73,15 +59,11 @@ object CusumByKeyStream {
     /** The raw folded (key, bucket, v) table, for spec equality checks. */
     private[graft] def sums: DataFrame = folded
 
-    /** Fold one micro-batch of (key, bucket, v) rows; single-writer
-      * synchronized, monotone batch-id guard.
-      */
-    def merge(batch: DataFrame, batchId: Long): Boolean = synchronized {
-      if (batchId <= lastBatch) return false
+    /** Fold one micro-batch of (key, bucket, v) rows. */
+    def merge(batch: DataFrame, batchId: Long): Boolean = core(batchId) { old =>
       val bc = batch.groupBy(col("key"), col("bucket"))
         .agg(sum(col("v")).as("bv"))
-      val old = sumsRef.get()
-      val merged =
+      Step(materialize(
         if (old == null) bc.select(col("key"), col("bucket"), col("bv").as("v"))
         else old.as("o")
           .join(bc.as("b"),
@@ -90,25 +72,15 @@ object CusumByKeyStream {
           .select(
             coalesce(col("o.key"), col("b.key")).as("key"),
             coalesce(col("o.bucket"), col("b.bucket")).as("bucket"),
-            (coalesce(col("o.v"), lit(0L)) + coalesce(col("b.bv"), lit(0L))).as("v"))
-      val nc = materialize(merged)
-      durable.foreach(dir => SnapshotStore.write(spark, dir, nc, batchId))
-      sumsRef.set(nc)
-      lastBatch = batchId
-      if (old != null) old.unpersist()
-      true
+            (coalesce(col("o.v"), lit(0L)) + coalesce(col("b.bv"), lit(0L))).as("v"))))
     }
   }
 
   object KeyedCusumStore {
     /** Rebuild a durable store from `dir`'s newest complete snapshot. */
-    def restore(spark: SparkSession, dir: String): KeyedCusumStore = {
-      val store = new KeyedCusumStore(spark, Some(dir))
-      SnapshotStore.newest(spark, dir).foreach { case (upto, df) =>
-        store.seed(df, upto)
-      }
-      store
-    }
+    def restore(spark: SparkSession, dir: String): KeyedCusumStore =
+      new KeyedCusumStore(spark, Some(dir)).tap(_.core.restore((_, t) =>
+        materialize(t.head.select(col("key"), col("bucket"), col("v")))))
   }
 
   /** `(batch, batchId) => Unit` for `writeStream.foreachBatch`. */

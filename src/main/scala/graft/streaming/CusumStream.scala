@@ -1,10 +1,11 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicReference
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming CUSUM changepoint monitor — the unbounded twin of
   * [[graft.operators.Temporal.cusumChangepoints]]: a drift alarm that
@@ -17,7 +18,7 @@ import org.apache.spark.storage.StorageLevel
   * SUMS, and bucket sums are ADDITIVE across any batching of the stream —
   * so the ONLY state is the (bucket, v) table (time-bounded, the batch
   * operator's contract), merged per batch by keyed FULL OUTER + sum (the
-  * [[TransitionsStream]] count-merge shape) behind a monotone batch-id
+  * [[TransitionsStream]] count-merge shape) behind the [[BatchStore]]
   * guard. No boundary row is needed (unlike transitions): addition has
   * no order. `current` derives the full scan — scaled statistics and the
   * argmax flag — from the folded table at read time via the SHARED batch
@@ -29,77 +30,43 @@ import org.apache.spark.storage.StorageLevel
   */
 object CusumStream {
 
-  /** Per-bucket value sums across micro-batches. When `durable` carries
-    * a snapshot directory, every applied batch writes the merged table
-    * (time-bounded by contract) BEFORE the batch is acknowledged, so a
-    * driver restart rebuilds the exact folded state via [[restore]] and
-    * checkpoint-replayed batches drop on the monotone guard — the
-    * [[CmsStream.SketchStore]] durability shape.
+  /** Per-bucket value sums across micro-batches, under the
+    * [[BatchStore]] contract; with `durable` every applied batch
+    * snapshots the merged table (time-bounded by contract), restored by
+    * [[CusumStore.restore]].
     */
   final class CusumStore(spark: SparkSession, durable: Option[String] = None) {
     import spark.implicits._
 
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count()
-      cut
-    }
-
-    private val sumsRef = new AtomicReference[DataFrame](materialize(
-      Seq.empty[(Long, Long)].toDF("bucket", "v")))
-    @volatile private var lastBatch = -1L
-
-    private[streaming] def seed(df: DataFrame, upto: Long): Unit = synchronized {
-      val nc = materialize(df.select(col("bucket"), col("v")))
-      val oc = sumsRef.get()
-      sumsRef.set(nc)
-      lastBatch = upto
-      oc.unpersist()
-    }
+    private val core = new BatchStore[DataFrame](
+      materialize(Seq.empty[(Long, Long)].toDF("bucket", "v")),
+      Seq(_), durable.map(BatchStore.Log(spark, _)))
 
     /** The monitor read: the batch operator over the folded sums. */
     def current: DataFrame =
-      graft.operators.Temporal.cusumChangepoints(sumsRef.get())
+      graft.operators.Temporal.cusumChangepoints(core.state)
 
     /** The raw folded (bucket, v) table, for spec equality checks. */
-    private[graft] def sums: DataFrame = sumsRef.get()
+    private[graft] def sums: DataFrame = core.state
 
-    /** Fold one micro-batch of (bucket, v) rows; single-writer
-      * synchronized, monotone batch-id guard (at-least-once delivery
-      * folds each batch exactly once).
-      */
-    def merge(batch: DataFrame, batchId: Long): Boolean = synchronized {
-      if (batchId <= lastBatch) return false
+    /** Fold one micro-batch of (bucket, v) rows. */
+    def merge(batch: DataFrame, batchId: Long): Boolean = core(batchId) { old =>
       val bc = batch.groupBy(col("bucket")).agg(sum(col("v")).as("bv"))
-      val merged = sumsRef.get().as("o")
+      Step(materialize(old.as("o")
         .join(bc.as("b"), col("o.bucket") === col("b.bucket"), "full_outer")
         .select(
           coalesce(col("o.bucket"), col("b.bucket")).as("bucket"),
-          (coalesce(col("o.v"), lit(0L)) + coalesce(col("b.bv"), lit(0L))).as("v"))
-      val nc = materialize(merged)
-      // durable: snapshot BEFORE acknowledging, so a crash between write
-      // and ack only re-folds a batch the guard then drops
-      durable.foreach(dir => SnapshotStore.write(spark, dir, nc, batchId))
-      val oc = sumsRef.get()
-      sumsRef.set(nc)
-      lastBatch = batchId
-      oc.unpersist()
-      true
+          (coalesce(col("o.v"), lit(0L)) + coalesce(col("b.bv"), lit(0L))).as("v"))))
     }
   }
 
   object CusumStore {
-    /** Rebuild a durable store from `dir`'s newest complete snapshot —
-      * the restart path; a missing/empty `dir` restores a cold store.
+    /** Rebuild a durable store from `dir` — the restart path; a
+      * missing/empty `dir` restores a cold store.
       */
-    def restore(spark: SparkSession, dir: String): CusumStore = {
-      val store = new CusumStore(spark, Some(dir))
-      SnapshotStore.newest(spark, dir).foreach { case (upto, df) =>
-        store.seed(df, upto)
-      }
-      store
-    }
+    def restore(spark: SparkSession, dir: String): CusumStore =
+      new CusumStore(spark, Some(dir)).tap(_.core.restore((_, t) =>
+        materialize(t.head.select(col("bucket"), col("v")))))
   }
 
   /** `(batch, batchId) => Unit` for `writeStream.foreachBatch`. */

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicReference
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming distribution-drift monitor — the unbounded twin of
   * [[graft.operators.Hygiene.driftReport]]: an ingest stream's value
@@ -32,32 +33,23 @@ import org.apache.spark.storage.StorageLevel
   * under any batch split; [[DriftStore.currentPsi]] serves
   * [[graft.operators.Hygiene.psiDrift]] the same way off the same state.
   *
-  * Exactly-once accounting: count merge is not idempotent, so the
-  * monotone batch-id guard drops re-deliveries ([[CmsStream.SketchStore]]
-  * discipline).
+  * Count merge is not idempotent, so exactly-once rests on the
+  * [[BatchStore]] guard.
   */
 object DriftStream {
 
-  /** Running per-column value counts vs a fixed reference dump. When
-    * `durable` carries a snapshot directory, every applied batch writes
-    * the merged counts table (NDV-bounded by the watched-column
-    * contract) BEFORE the batch is acknowledged — a restarted drift
-    * monitor that silently serves reset counts while the checkpoint
-    * marks batches delivered is the worst failure mode a drift alarm
-    * can have. Restore via [[DriftStore.restore]]; the reference side
-    * is re-counted from the (immutable) reference dump at construction.
+  /** Running per-column value counts vs a fixed reference dump, under
+    * the [[BatchStore]] contract. With `durable` every applied batch
+    * snapshots the merged counts table (NDV-bounded by the
+    * watched-column contract) — a restarted drift monitor that silently
+    * serves reset counts is the worst failure mode a drift alarm can
+    * have. Restore via [[DriftStore.restore]]; the reference side is
+    * re-counted from the (immutable) reference dump at construction.
     */
   final class DriftStore(spark: SparkSession, cols: Seq[String],
       reference: DataFrame, durable: Option[String] = None) {
     require(cols.nonEmpty, "need at least one column to monitor")
     import spark.implicits._
-
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count() // force now: a failed merge must fail BEFORE the swap
-      cut
-    }
 
     // the batch operators' null-safe cell grain ([[graft.operators
     // .Hygiene.categoryCells]]): (coalesced value, is-null flag), so a
@@ -70,35 +62,15 @@ object DriftStream {
 
     // the reference side is counted ONCE at construction
     private val refCounts = materialize(colCounts(reference))
-    private val runRef = new AtomicReference[DataFrame](materialize(
-      Seq.empty[(String, String, Boolean, Long)].toDF("col_name", "v", "vn", "n")))
-    @volatile private var lastBatch = -1L
+    private val core = new BatchStore[DataFrame](materialize(
+      Seq.empty[(String, String, Boolean, Long)].toDF("col_name", "v", "vn", "n")),
+      Seq(_), durable.map(BatchStore.Log(spark, _)))
 
-    private[streaming] def seed(df: DataFrame, upto: Long): Unit = synchronized {
-      val next = materialize(
-        df.select(col("col_name"), col("v"), col("vn"), col("n")))
-      val old = runRef.get()
-      runRef.set(next)
-      lastBatch = upto
-      old.unpersist()
-    }
-
-    /** Fold one micro-batch's counts in; replays drop on the guard. */
-    def merge(batch: DataFrame, batchId: Long): Boolean = synchronized {
-      if (batchId <= lastBatch) return false
-      val merged = runRef.get().unionAll(colCounts(batch))
+    /** Fold one micro-batch's counts in. */
+    def merge(batch: DataFrame, batchId: Long): Boolean = core(batchId)(old =>
+      Step(materialize(old.unionAll(colCounts(batch))
         .groupBy(col("col_name"), col("v"), col("vn"))
-        .agg(sum(col("n")).as("n"))
-      val next = materialize(merged)
-      // durable: snapshot BEFORE acknowledging, so a crash between write
-      // and ack only re-folds a batch the guard then drops
-      durable.foreach(dir => SnapshotStore.write(spark, dir, next, batchId))
-      val old = runRef.get()
-      runRef.set(next)
-      lastBatch = batchId
-      old.unpersist()
-      true
-    }
+        .agg(sum(col("n")).as("n")))))
 
     private def cells(counts: DataFrame, c: String): DataFrame = counts
       .where(col("col_name") === lit(c)).select(col("v"), col("vn"), col("n"))
@@ -112,7 +84,7 @@ object DriftStream {
       * frames filter the persisted NDV-bounded counts tables.
       */
     def current: DataFrame = {
-      val run = runRef.get()
+      val run = core.state
       cols.map(c => graft.operators.Hygiene.tvdFromCells(
           cells(refCounts, c), cells(run, c), c))
         .reduce(_ unionAll _)
@@ -126,7 +98,7 @@ object DriftStream {
       * served consistently from one state table.
       */
     def currentPsi: DataFrame = {
-      val run = runRef.get()
+      val run = core.state
       cols.map(c => graft.operators.Hygiene.psiFromCells(
           cells(refCounts, c), cells(run, c), c))
         .reduce(_ unionAll _)
@@ -134,17 +106,14 @@ object DriftStream {
   }
 
   object DriftStore {
-    /** Rebuild a durable store from `dir`'s newest complete snapshot —
-      * the restart path; a missing/empty `dir` restores a cold store.
+    /** Rebuild a durable store from `dir` — the restart path; a
+      * missing/empty `dir` restores a cold store.
       */
     def restore(spark: SparkSession, dir: String, cols: Seq[String],
-        reference: DataFrame): DriftStore = {
-      val store = new DriftStore(spark, cols, reference, Some(dir))
-      SnapshotStore.newest(spark, dir).foreach { case (upto, df) =>
-        store.seed(df, upto)
-      }
-      store
-    }
+        reference: DataFrame): DriftStore =
+      new DriftStore(spark, cols, reference, Some(dir)).tap(_.core.restore(
+        (_, t) => materialize(t.head.select(col("col_name"), col("v"),
+          col("vn"), col("n")))))
   }
 
   /** `(batch, batchId) => Unit` for `writeStream.foreachBatch`. */
@@ -156,9 +125,5 @@ object DriftStream {
     */
   def run(rows: DataFrame, store: DriftStore, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink(store))
-      .outputMode("update")
-      .start()
+    BatchStore.run(rows, checkpointDir)(sink(store))
 }

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextAnalysis
+import graft.streaming.BatchStore.Step
 
 /** Streaming heavy hitters — a running Misra–Gries summary over an
   * unbounded document stream, the streaming twin of
@@ -31,14 +32,8 @@ import graft.operators.TextAnalysis
   * the streaming deliverable, and a periodic batch recount of its ≤ k
   * candidates hardens it when the source is retained.)
   *
-  * Exactly-once accounting under `foreachBatch`'s at-least-once replay:
-  * MG-merge is not idempotent, so the store keeps the last applied batch
-  * id and drops re-deliveries — the same monotone-batch-id discipline as
-  * [[CmsStream.SketchStore]], with the same single-store-per-query
-  * topology and the same durable-snapshot restart path (`durable` +
-  * [[MgStore.restore]]): the ≤ k summary writes to the snapshot table
-  * before the batch is acknowledged, so a driver restart rebuilds the
-  * exact summary and replayed batches are dropped by the guard.
+  * MG-merge is not idempotent, so exactly-once rests on the
+  * [[BatchStore]] guard.
   */
 object HeavyHittersStream {
 
@@ -74,67 +69,42 @@ object HeavyHittersStream {
     row.map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
-  /** Running MG summary, merged per micro-batch. Same concurrency
-    * contract as [[CmsStream.SketchStore]]: `add` is one atomic
-    * guard+merge step; reads are lock-free on the immutable map.
+  /** Running MG summary, merged per micro-batch under the [[BatchStore]]
+    * exactly-once contract; with `durable` the merged ≤ k summary
+    * snapshots every applied batch. Reads are lock-free on the immutable
+    * map.
     */
   final class MgStore(val k: Int,
       durable: Option[(SparkSession, String)] = None) {
     require(k >= 2, s"k must be >= 2: $k")
-    private val ref = new AtomicReference[Map[String, Long]](Map.empty)
-    private val lastBatch = new AtomicLong(-1L)
+    private val core = new BatchStore[Map[String, Long]](Map.empty, _ => Nil,
+      durable.map { case (spark, dir) => BatchStore.Log(spark, dir) },
+      durable.map { case (spark, _) => (m: Map[String, Long]) =>
+        import spark.implicits._
+        Seq(m.toSeq.toDF("token", "count"))
+      })
 
     /** Current summary: ≤ k (token, lower-bound count) pairs. */
-    def summary: Map[String, Long] = ref.get()
+    def summary: Map[String, Long] = core.state
 
     /** The last applied batch id (−1 when nothing applied yet). */
-    def lastApplied: Long = lastBatch.get()
+    def lastApplied: Long = core.lastApplied
 
-    private[streaming] def seed(s: Map[String, Long], upto: Long): Unit = {
-      ref.set(s)
-      lastBatch.set(upto)
-    }
-
-    /** MG-merge one batch summary; re-delivered batch ids are dropped.
-      * When durable, the merged ≤ k summary writes to the snapshot table
-      * FIRST ([[CmsStream.SketchStore]]'s ordering: a failed write fails
-      * the batch so it replays — never a committed batch with lost
-      * counts).
+    /** MG-merge one batch summary, evaluated only once the batch passes
+      * the guard. Returns whether it was applied.
       */
-    def add(batchId: Long, batch: Map[String, Long]): Boolean = synchronized {
-      if (batchId <= lastBatch.get()) return false
-      val merged = mgMerge(ref.get(), batch, k)
-      durable.foreach { case (spark, dir) =>
-        MgStore.writeSnapshot(spark, dir, merged, batchId)
-      }
-      ref.set(merged)
-      lastBatch.set(batchId)
-      true
-    }
+    def add(batchId: Long, batch: => Map[String, Long]): Boolean =
+      core(batchId)(cur => Step(mgMerge(cur, batch, k)))
   }
 
   object MgStore {
-    private[streaming] def writeSnapshot(spark: SparkSession, dir: String,
-        summary: Map[String, Long], batchId: Long): Unit = {
-      import spark.implicits._
-      SnapshotStore.write(spark, dir, summary.toSeq.toDF("token", "count"),
-        batchId)
-    }
-
-    /** Rebuild a durable store from `dir`'s newest complete snapshot —
-      * the restart path ([[CmsStream.SketchStore.restore]] semantics:
-      * `_SUCCESS`-gated newest snapshot, replays below the restored id
-      * dropped, cold start on a missing dir; any Spark-writable scheme
-      * via [[SnapshotStore]]).
+    /** Rebuild a durable store from `dir` — the restart path,
+      * [[BatchStore.restore]]; a missing or empty `dir` restores a cold
+      * store.
       */
-    def restore(spark: SparkSession, dir: String, k: Int): MgStore = {
-      val store = new MgStore(k, Some((spark, dir)))
-      SnapshotStore.newest(spark, dir).foreach { case (upto, df) =>
-        store.seed(df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-          upto)
-      }
-      store
-    }
+    def restore(spark: SparkSession, dir: String, k: Int): MgStore =
+      new MgStore(k, Some((spark, dir))).tap(_.core.restore(
+        (_, t) => t.head.collect().map(r => r.getString(0) -> r.getLong(1)).toMap))
   }
 
   /** `(batch, batchId) => Unit` for `writeStream.foreachBatch`. */
@@ -146,9 +116,5 @@ object HeavyHittersStream {
     */
   def run(docs: DataFrame, store: MgStore, checkpointDir: String,
           textCol: String = "text"): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink(store, textCol))
-      .outputMode("update")
-      .start()
+    BatchStore.run(docs, checkpointDir)(sink(store, textCol))
 }

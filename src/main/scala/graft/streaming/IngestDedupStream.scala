@@ -1,14 +1,12 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicReference
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Dedup
 import graft.sources.DedupIndex
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Self-maintaining ingest dedup — the production daily-ingest loop as a
   * streaming twin: each micro-batch of new documents (a) PROBES the
@@ -30,9 +28,9 @@ import graft.sources.DedupIndex
   * batching. Ids must be unique across the stream (the usual ingest
   * contract); pairs are canonicalized to doc_a < doc_b.
   *
-  * Exactly-once: the index append is not idempotent, so the monotone
-  * batch-id guard drops re-deliveries ([[CmsStream.SketchStore]]
-  * discipline) BEFORE any artifact write. Cache note: each merge
+  * Exactly-once: the index append is not idempotent, so the
+  * [[BatchStore]] guard drops re-deliveries BEFORE any artifact write.
+  * Cache note: each merge
   * releases the shared shingle-cache pool after materializing its pairs
   * (the store assumes single-tenant use of [[Dedup]]'s pool during a
   * merge — concurrent batch queries stay correct, they just lose a
@@ -48,70 +46,48 @@ object IngestDedupStream {
     require(compactEvery >= 1, s"compactEvery must be >= 1: $compactEvery")
     import spark.implicits._
 
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count() // force now: a failed merge must fail BEFORE the swap
-      cut
-    }
-
-    // Restart durability (the SketchStore discipline one rung up): the
+    // Restart durability (the BatchStore contract one rung up): the
     // on-disk index under `dir` survives a driver restart but an
     // in-memory-only `indexed` flag would not — a rebuilt store would
     // call DedupIndex.build with mode("overwrite"), DESTROYING the
     // accumulated bands/sets this loop exists to grow, while the
     // checkpoint already marks earlier batches committed (never
     // re-probed). So: (a) `indexed` initializes from the artifact itself
-    // (bands/_SUCCESS present), and (b) each batch's NEW pairs + the
-    // batch id persist as `pairs_snap/delta=<batchId>` entries in a
-    // [[SnapshotStore]] DELTA LOG (write-before-commit), so a rebuilt
-    // store resumes where the artifact is and replayed batches drop on
-    // the monotone guard instead of double-appending. The pair table is
-    // append-only and grows without bound, so a full per-batch snapshot
-    // would cost O(total) I/O per batch (quadratic cumulative) through
-    // one coalesced task — the delta log keeps per-batch I/O O(delta).
-    // No pair lands in two deltas: (a,b) is emitted only by the later
-    // doc's batch, and the torn-replay self-probe duplicates collapse
-    // under the per-batch distinct below.
+    // (bands/_SUCCESS present), and (b) each batch commits its NEW pairs
+    // as a `pairs_snap/delta=<batchId>` entry, every `compactEvery`-th
+    // batch the accumulated pairs as a full `upto=` snapshot instead, so
+    // a rebuilt store resumes where the artifact is and replayed batches
+    // drop on the restored guard instead of double-appending. The pair
+    // table is append-only and grows without bound — the delta log keeps
+    // per-batch I/O O(delta). No pair lands in two deltas: (a,b) is
+    // emitted only by the later doc's batch, and the torn-replay
+    // self-probe duplicates collapse under the per-batch distinct below.
+    // Restore also adopts a legacy full `upto=` snapshot from the
+    // pre-delta-log format: without it an upgraded deployment would
+    // restore empty while its checkpoint marks every earlier batch
+    // delivered.
     private def artifactExists: Boolean = {
       val p = new Path(s"$dir/bands/_SUCCESS")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
 
-    private val snapDir = s"$dir/pairs_snap"
-
-    // restore = (newest full `upto=` snapshot — either a compaction
-    // point written on the compactEvery cadence, or a legacy full
-    // snapshot from the pre-delta-log format; without this read an
-    // upgraded deployment would restore empty while its checkpoint marks
-    // every earlier batch delivered) + all deltas NEWER than it
-    private val legacySnap = SnapshotStore.newest(spark, snapDir)
-    private val legacyId = legacySnap.map(_._1).getOrElse(-1L)
-    private val deltas =
-      SnapshotStore.deltaIds(spark, snapDir).filter(_._1 > legacyId)
-
-    private val pairsRef = new AtomicReference[DataFrame](materialize {
-      val base = legacySnap
-        .map(_._2.select(col("doc_a"), col("doc_b"), col("jaccard")))
-        .getOrElse(Seq.empty[(Long, Long, Double)].toDF("doc_a", "doc_b", "jaccard"))
-      if (deltas.isEmpty) base
-      else base.unionAll(
-        spark.read.parquet(deltas.map(_._2.toString): _*)
-          .select(col("doc_a"), col("doc_b"), col("jaccard")))
-    })
-    @volatile private var lastBatch =
-      math.max(legacyId, deltas.lastOption.map(_._1).getOrElse(-1L))
-    @volatile private var lastCompact = lastBatch
+    private def pairRows(df: DataFrame) =
+      df.select(col("doc_a"), col("doc_b"), col("jaccard"))
+    private val core = new BatchStore[DataFrame](
+      materialize(Seq.empty[(Long, Long, Double)].toDF("doc_a", "doc_b", "jaccard")),
+      Seq(_), Some(BatchStore.Log(spark, s"$dir/pairs_snap",
+        deltas = Some(s"$dir/pairs_snap"), every = compactEvery)))
+    core.restore((_, t) => materialize(pairRows(t.head)),
+      (s, d) => materialize(s.unionAll(pairRows(d.head))))
     @volatile private var indexed = artifactExists
 
     /** Near-dup pairs among everything delivered so far — spec-pinned
       * ≡ [[Dedup.minhashLshPairs]] over the concatenated stream.
       */
-    def pairs: DataFrame = pairsRef.get()
+    def pairs: DataFrame = core.state
 
     /** Fold one micro-batch in; replays drop on the guard. */
-    def merge(batch: DataFrame, batchId: Long): Boolean = synchronized {
-      if (batchId <= lastBatch) return false
+    def merge(batch: DataFrame, batchId: Long): Boolean = core(batchId) { old =>
       // scope the per-batch shingle/signature caches (the LSH chain and
       // the index probe both register into the session pool): releasing
       // exactly this batch's registrations on exit replaces the previous
@@ -129,7 +105,7 @@ object IngestDedupStream {
             tau, idCol, textCol, n, bands, rows)
           // probe orients (new, indexed); canonicalize to doc_a < doc_b.
           // The self-pair filter matters only in the torn-replay window
-          // (crash between index append and snapshot commit): the replay
+          // (crash between index append and the delta commit): the replay
           // then probes a batch already IN the index, matching each doc
           // to itself.
           raw.filter(col("doc_a") =!= col("doc_b")).select(
@@ -144,7 +120,7 @@ object IngestDedupStream {
       // a pure function of the two shingle sets, so exact-row distinct
       // collapses both. Outside that window it is a no-op on unique pairs.
       val delta = materialize(within.unionAll(cross).distinct())
-      val next = materialize(pairsRef.get().unionAll(delta))
+      val next = materialize(old.unionAll(delta))
       // grow the artifact only after the pair fold is safely materialized:
       // a failure above leaves both the pairs AND the index at the old
       // batch, so the checkpoint replays the whole batch consistently
@@ -154,27 +130,8 @@ object IngestDedupStream {
       } else {
         DedupIndex.append(spark, dir, batch, idCol, textCol, n, bands, rows)
       }
-      // durable commit point: only THIS batch's pairs are written — the
-      // accumulated table is the union of the delta log on restore
-      SnapshotStore.writeDelta(spark, snapDir, delta, batchId)
-      // periodic compaction: fold the accumulated pairs into a full
-      // `upto=` snapshot (the same format the restore path already
-      // reads) and prune the deltas it supersedes — without a cadence a
-      // long-lived ingest pays O(#batches-ever) listing/footers on
-      // every restore
-      if (batchId >= lastCompact + compactEvery) {
-        SnapshotStore.write(spark, snapDir, next, batchId,
-          singleFile = false)
-        SnapshotStore.pruneDeltas(spark, snapDir, batchId)
-        lastCompact = batchId
+      Step(next, Seq(delta))
       }
-      delta.unpersist()
-      val old = pairsRef.get()
-      pairsRef.set(next)
-      lastBatch = batchId
-      old.unpersist()
-      }
-      true
     }
   }
 
@@ -187,9 +144,5 @@ object IngestDedupStream {
     */
   def run(docs: DataFrame, store: IngestStore, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink(store))
-      .outputMode("update")
-      .start()
+    BatchStore.run(docs, checkpointDir)(sink(store))
 }

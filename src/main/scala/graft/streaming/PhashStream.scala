@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Multimodal
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming perceptual image dedup — the streaming twin of the batch
   * `mm_phash_dup` composition: micro-batches of (doc_id, payload) images
@@ -32,139 +32,65 @@ import graft.operators.Multimodal
   * are excluded from grouping exactly as the batch registry row excludes
   * them.
   *
-  * Exactly-once accounting under `foreachBatch`'s at-least-once replay:
   * `n_dups` SUM-merge is NOT idempotent (unlike [[ComponentsStream]]'s
-  * min-label merge), so the store keeps the last applied batch id and
-  * drops re-deliveries at or below it — the [[CmsStream.SketchStore]]
-  * monotone-guard discipline. The swap is atomic and lineage-cut
-  * ([[ComponentsStream.LabelStore]]'s materialize-before-swap), so a
-  * failed merge keeps the previous registry and batch N's plan never
-  * re-derives batches 0..N-1.
+  * min-label merge), so exactly-once rests on the [[BatchStore]] guard.
   */
 object PhashStream {
 
   /** (ahash_hi, ahash_lo, rep_id, n_dups) registry held across batches.
     *
-    * Durability (with `durable` set): the registry is a SUM-merged table
-    * (one row per distinct content hash — corpus-scale), so neither a
-    * per-batch full snapshot (O(registry) I/O per batch through one
-    * task) nor a snapshot-every-K gap (sum merge is NOT idempotent —
-    * replays would double-count) is right. Instead the per-batch GROUPED
+    * Durability (with `durable` set), under the [[BatchStore]] contract:
+    * the registry is corpus-scale, so each batch commits its GROUPED
     * counts — a commutative-monoid delta: min-merge rep_id, sum-merge
-    * n_dups — persist as a [[SnapshotStore]] delta log under
-    * `dir/deltas` (the commit point, written every batch so the guard is
-    * durable; a torn delta is overwritten whole by its replay, and the
-    * grouped counts are deterministic so the overwrite is identical),
-    * and every `compactEvery`-th batch the folded registry itself
-    * snapshots under `dir/full` (partitioned — no single-task funnel),
-    * after which the now-redundant deltas ≤ that id are pruned. Restore
-    * = newest full snapshot ∪ deltas after it, re-grouped — exactly the
-    * merge algebra.
+    * n_dups — to the delta log under `dir/deltas` (every batch, even an
+    * empty one, so the guard is durable; the grouped counts are
+    * deterministic, so a torn delta's replay overwrites it identically),
+    * and every `compactEvery`-th batch commits the folded registry itself
+    * to `dir/full` (partitioned) instead, pruning the deltas it covers.
+    * The cadence runs on empty batches too, so an idle stream's log stays
+    * bounded at `compactEvery` entries. Restore = newest full snapshot ∪
+    * deltas after it, re-grouped — exactly the merge algebra.
     */
   final class HashGroupStore(spark: SparkSession, initial: DataFrame,
       durable: Option[String] = None, compactEvery: Int = 64) {
     require(compactEvery >= 1, s"compactEvery must be >= 1: $compactEvery")
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count() // force now: a failed merge must fail BEFORE the swap
-      cut
-    }
-    private val ref = new AtomicReference[DataFrame](materialize(
-      initial.select(col("ahash_hi"), col("ahash_lo"), col("rep_id"), col("n_dups"))))
-    private val lastBatch = new AtomicLong(-1L)
-    @volatile private var lastCompact = -1L
+    private val core = new BatchStore[DataFrame](materialize(registry(initial)),
+      Seq(_), durable.map(dir => BatchStore.Log(spark, s"$dir/full",
+        deltas = Some(s"$dir/deltas"), every = compactEvery)))
 
     /** The current registry — always fully materialized, never mid-merge. */
-    def current: DataFrame = ref.get()
+    def current: DataFrame = core.state
 
-    private[streaming] def seed(df: DataFrame, upto: Long): Unit = synchronized {
-      val next = materialize(df.select(
-        col("ahash_hi"), col("ahash_lo"), col("rep_id"), col("n_dups")))
-      val old = ref.get()
-      ref.set(next)
-      lastBatch.set(upto)
-      // the restored state IS a compaction point: without seeding the
-      // cadence, the first post-restart batch would satisfy
-      // `id >= -1 + compactEvery` and rewrite the full corpus-scale
-      // registry one batch after an equivalent snapshot already exists
-      lastCompact = upto
-      old.unpersist()
-    }
+    private def fold(old: DataFrame, grouped: DataFrame): DataFrame =
+      materialize(old.unionAll(registry(grouped))
+        .groupBy(col("ahash_hi"), col("ahash_lo"))
+        .agg(min(col("rep_id")).as("rep_id"), sum(col("n_dups")).as("n_dups")))
 
     /** Merge one micro-batch of hashed rows (doc_id, ahash_hi, ahash_lo);
-      * re-delivered batch ids (≤ the last applied) are dropped so replay
-      * never double-counts. Returns whether the batch was applied.
+      * returns whether the batch was applied.
       */
-    def merge(batchId: Long, hashed: DataFrame): Boolean = synchronized {
-      if (batchId <= lastBatch.get()) return false
-      val old = ref.get()
+    def merge(batchId: Long, hashed: DataFrame): Boolean = core(batchId) { old =>
       val grouped = materialize(hashed
         .filter(col("ahash_hi") >= 0)
         .groupBy(col("ahash_hi"), col("ahash_lo"))
         .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("n_dups")))
-      // durable: the per-batch delta commits BEFORE the batch is
-      // acknowledged — every batch, even empty, so the guard is durable
-      durable.foreach(dir =>
-        SnapshotStore.writeDelta(spark, s"$dir/deltas", grouped, batchId))
-      if (!grouped.isEmpty) {
-        val next = materialize(old.unionAll(grouped)
-          .groupBy(col("ahash_hi"), col("ahash_lo"))
-          .agg(min(col("rep_id")).as("rep_id"), sum(col("n_dups")).as("n_dups")))
-        ref.set(next)
-        old.unpersist()
-      }
-      // compaction cadence OUTSIDE the non-empty branch: an idle stream
-      // (sparse or empty batches) still accumulates one tiny delta per
-      // batch for the durable guard, and without this the delta log
-      // would grow — and restore-time listing/union cost with it —
-      // until the next non-empty batch past the cadence; snapshotting
-      // the (possibly unchanged) registry keeps the log bounded at
-      // compactEvery entries regardless of traffic shape
-      durable.foreach { dir =>
-        if (batchId >= lastCompact + compactEvery) {
-          SnapshotStore.write(spark, s"$dir/full", ref.get(), batchId,
-            singleFile = false)
-          SnapshotStore.pruneDeltas(spark, s"$dir/deltas", batchId)
-          lastCompact = batchId
-        }
-      }
-      grouped.unpersist()
-      lastBatch.set(batchId)
-      true
+      Step(if (grouped.isEmpty) old else fold(old, grouped), Seq(grouped))
     }
   }
 
   object HashGroupStore {
-    /** Rebuild a durable store from `dir` — the restart path: the newest
-      * complete full snapshot (if any) unioned with the deltas after it,
-      * re-grouped under the registry's own merge algebra. A
-      * missing/empty `dir` restores a cold store.
+    /** Rebuild a durable store from `dir` — the restart path,
+      * [[BatchStore.restore]]; a missing/empty `dir` restores a cold store.
       */
     def restore(spark: SparkSession, dir: String,
-        compactEvery: Int = 64): HashGroupStore = {
-      val store = new HashGroupStore(spark, emptyGroups(spark), Some(dir),
-        compactEvery)
-      val full = SnapshotStore.newest(spark, s"$dir/full")
-      val fullId = full.map(_._1).getOrElse(-1L)
-      val deltas = SnapshotStore.deltaIds(spark, s"$dir/deltas")
-        .filter(_._1 > fullId)
-      val parts = full.map(_._2).toSeq ++
-        (if (deltas.nonEmpty)
-          Seq(spark.read.parquet(deltas.map(_._2.toString): _*)
-            .select(col("ahash_hi"), col("ahash_lo"),
-              col("rep_id"), col("n_dups")))
-        else Seq.empty)
-      if (parts.nonEmpty) {
-        val folded = parts.reduce(_ unionAll _)
-          .groupBy(col("ahash_hi"), col("ahash_lo"))
-          .agg(min(col("rep_id")).as("rep_id"), sum(col("n_dups")).as("n_dups"))
-        store.seed(folded, math.max(fullId,
-          deltas.lastOption.map(_._1).getOrElse(-1L)))
-      }
-      store
-    }
+        compactEvery: Int = 64): HashGroupStore =
+      new HashGroupStore(spark, emptyGroups(spark), Some(dir), compactEvery)
+        .tap(s => s.core.restore((_, t) => materialize(registry(t.head)),
+          (st, d) => s.fold(st, d.head)))
   }
+
+  private def registry(df: DataFrame): DataFrame =
+    df.select(col("ahash_hi"), col("ahash_lo"), col("rep_id"), col("n_dups"))
 
   /** An empty cold-start registry with the store's schema. */
   def emptyGroups(spark: SparkSession): DataFrame = {
@@ -184,9 +110,5 @@ object PhashStream {
     */
   def run(images: DataFrame, store: HashGroupStore, checkpointDir: String,
           grid: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    images.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink(store, grid))
-      .outputMode("update")
-      .start()
+    BatchStore.run(images, checkpointDir)(sink(store, grid))
 }

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Splits
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming fixed-size per-stratum sampling — the streaming twin of
   * [[graft.operators.Splits.samplePerStratum]]: micro-batches of documents
@@ -34,21 +34,18 @@ import graft.operators.Splits
   * in or below the held sample and changes nothing. The
   * `dropDuplicates(stratum, id)` before re-selection is what makes that
   * true (a replayed row must not appear twice and occupy two of a
-  * stratum's k slots); the monotone batch-id guard is kept anyway so a
-  * replay skips the merge work entirely, not just its effect. The swap is
-  * atomic and lineage-cut ([[ComponentsStream.LabelStore]]'s
-  * materialize-before-swap): a failed merge keeps the previous sample and
-  * batch N's plan never re-derives batches 0..N-1.
+  * stratum's k slots); the [[BatchStore]] guard is kept anyway so a
+  * replay skips the merge work entirely, not just its effect.
   */
 object SampleStream {
 
-  /** (stratum, id, sample_key) running sample held across batches. When
-    * `durable` carries a snapshot directory, every applied batch writes
-    * the merged sample (≤ k rows per stratum — bounded) BEFORE the batch
-    * is acknowledged; a rebuilt store restores the newest snapshot via
-    * [[SampleStore.restore]] instead of serving a reset sample while the
-    * checkpoint marks batches delivered. Merge idempotence means a
-    * replay that slips the restored guard is harmless anyway.
+  /** (stratum, id, sample_key) running sample held across batches, under
+    * the [[BatchStore]] contract. With `durable` every applied non-empty
+    * batch snapshots the merged sample (≤ k rows per stratum — bounded),
+    * restored by [[SampleStore.restore]] instead of serving a reset
+    * sample while the checkpoint marks batches delivered. Merge
+    * idempotence means a replay that slips the restored guard is
+    * harmless anyway.
     */
   final class SampleStore(
       spark: SparkSession, initial: DataFrame,
@@ -61,65 +58,37 @@ object SampleStream {
         df.dropDuplicates(stratumCol, idCol),
         Seq(stratumCol), Seq(("sample_key", true), (idCol, true)), k)
 
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count() // force now: a failed merge must fail BEFORE the swap
-      cut
-    }
+    private def sampled(df: DataFrame): DataFrame =
+      df.select(col(stratumCol), col(idCol), col("sample_key"))
 
-    private val ref = new AtomicReference[DataFrame](materialize(
-      reselect(initial.select(col(stratumCol), col(idCol), col("sample_key")))))
-    private val lastBatch = new AtomicLong(-1L)
+    private val core = new BatchStore[DataFrame](
+      materialize(reselect(sampled(initial))), Seq(_),
+      durable.map(BatchStore.Log(spark, _)))
 
     /** The current sample — always fully materialized, never mid-merge. */
-    def current: DataFrame = ref.get()
+    def current: DataFrame = core.state
 
-    /** Merge one micro-batch of (stratum, id) rows. Re-delivered batch ids
-      * (≤ the last applied) are skipped — a no-op by idempotence anyway.
-      * Returns whether the batch was applied.
+    /** Merge one micro-batch of (stratum, id) rows; returns whether the
+      * batch was applied (an empty one commits nothing — replaying it is
+      * trivially idempotent).
       */
-    def merge(batchId: Long, batch: DataFrame): Boolean = synchronized {
-      if (batchId <= lastBatch.get()) return false
-      val old = ref.get()
+    def merge(batchId: Long, batch: DataFrame): Boolean = core(batchId) { old =>
       val batchTop = Splits.samplePerStratum(
         batch.select(col(stratumCol), col(idCol)), idCol, stratumCol, k, seed = seed)
-      if (!batchTop.isEmpty) {
-        val next = materialize(reselect(old.unionByName(
-          batchTop.select(col(stratumCol), col(idCol), col("sample_key")))))
-        // durable: snapshot BEFORE acknowledging (empty batches skip —
-        // replaying one is trivially idempotent)
-        durable.foreach(dir => SnapshotStore.write(spark, dir, next, batchId))
-        ref.set(next)
-        old.unpersist()
-      }
-      lastBatch.set(batchId)
-      true
-    }
-
-    private[streaming] def seed(df: DataFrame, upto: Long): Unit = synchronized {
-      val next = materialize(
-        df.select(col(stratumCol), col(idCol), col("sample_key")))
-      val old = ref.get()
-      ref.set(next)
-      lastBatch.set(upto)
-      old.unpersist()
+      if (batchTop.isEmpty) Step(old, commit = false)
+      else Step(materialize(reselect(old.unionByName(sampled(batchTop)))))
     }
   }
 
   object SampleStore {
-    /** Rebuild a durable store from `dir`'s newest complete snapshot —
-      * the restart path; a missing/empty `dir` restores a cold store.
+    /** Rebuild a durable store from `dir` — the restart path; a
+      * missing/empty `dir` restores a cold store.
       */
     def restore(spark: SparkSession, dir: String, stratumCol: String,
-        idCol: String, k: Int, seed: Long = 12345L): SampleStore = {
-      val store = new SampleStore(spark, emptySample(spark, stratumCol, idCol),
+        idCol: String, k: Int, seed: Long = 12345L): SampleStore =
+      new SampleStore(spark, emptySample(spark, stratumCol, idCol),
         stratumCol, idCol, k, seed, Some(dir))
-      SnapshotStore.newest(spark, dir).foreach { case (upto, df) =>
-        store.seed(df, upto)
-      }
-      store
-    }
+        .tap(s => s.core.restore((_, t) => materialize(s.sampled(t.head))))
   }
 
   /** An empty cold-start sample with the store's schema. */
@@ -138,9 +107,5 @@ object SampleStream {
     */
   def run(docs: DataFrame, store: SampleStore, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink(store))
-      .outputMode("update")
-      .start()
+    BatchStore.run(docs, checkpointDir)(sink(store))
 }

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicReference
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming SCD2 history build — the streaming twin of the `q_scd2`
   * batch row ([[graft.operators.Temporal.scd2History]]): an unbounded
@@ -36,8 +35,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * State: `open` is one row per live key (key-bounded); `closed` grows
   * with the number of CHANGES — it is the operator's output, not
-  * incidental state, and lives as a lineage-cut table (the
-  * [[ComponentsStream.LabelStore]] swap discipline), never in driver
+  * incidental state, and lives as a lineage-cut table, never in driver
   * collections. At warehouse scale `closed` would be a parquet/table
   * sink ([[IdempotentSink]]); the in-memory table keeps the twin
   * self-contained for the harness.
@@ -53,62 +51,43 @@ object Scd2Stream {
       tsCol: String, tieCol: String, snapshotDir: Option[String] = None) {
     import spark.implicits._
 
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count() // force now: a failed merge must fail BEFORE the swap
-      cut
-    }
-
     private val emptyIntervals = Seq.empty[(Long, Long, String, Long, Option[Long], Boolean)]
       .toDF(keyCol, "version", "attr", "valid_from_us", "valid_to_us", "is_current")
 
-    // Durability (the SketchStore discipline one rung up): the four state
-    // pieces — closed history, open intervals, the per-key late-guard
-    // high-water mark, and the dropped-late counter — persist per applied
-    // batch as `<sub>/upto=<batchId>` [[SnapshotStore]] snapshots. A
-    // rebuilt store restores at the NEWEST id COMMON to all four
-    // sub-stores: a crash between sub-writes leaves the newest id partial
-    // in some sub-store, and restoring a mixed-batch state would corrupt
-    // shipped history — the common id is the last full commit, and the
-    // newest-two retention guarantees it survives exactly one torn write.
-    private val subs = Seq("closed", "open", "last_seen", "meta")
-    private val restoredId: Option[Long] = snapshotDir.flatMap { d =>
-      subs.map(s => SnapshotStore.snapshotIds(spark, s"$d/$s").map(_._1).toSet)
-        .reduce(_ intersect _).reduceOption(_ max _)
-    }
-    private def restore(sub: String): Option[DataFrame] = for {
-      d <- snapshotDir; id <- restoredId
-    } yield spark.read.parquet(s"$d/$sub/upto=$id")
-
-    private val closedRef = new AtomicReference[DataFrame](materialize(
-      restore("closed").getOrElse(emptyIntervals)))
-    private val openRef = new AtomicReference[DataFrame](materialize(
-      restore("open").getOrElse(emptyIntervals)))
-    // per-key high-water mark of the last FOLDED (ts, tie) — the late
-    // guard's anchor (the TransitionsStream lastRef discipline)
-    private val lastSeenRef = new AtomicReference[DataFrame](materialize(
-      restore("last_seen").getOrElse(
-        Seq.empty[(Long, Long, Long)].toDF(keyCol, "last_ts", "last_tie"))))
-    @volatile private var lastBatch = restoredId.getOrElse(-1L)
-    @volatile private var droppedLate =
-      restore("meta").map(_.head.getLong(0)).getOrElse(0L)
+    // Durability (the [[BatchStore]] contract): the four state pieces —
+    // closed history, open intervals, the per-key late-guard high-water
+    // mark, and the dropped-late counter — snapshot per applied batch as
+    // `<sub>/upto=<batchId>`, `meta` last. A rebuilt store restores at the
+    // NEWEST id COMMON to all four sub-stores: a crash between sub-writes
+    // leaves the newest id partial in some sub-store, and restoring a
+    // mixed-batch state would corrupt shipped history — the common id is
+    // the last full commit, and the newest-two retention guarantees it
+    // survives exactly one torn write.
+    // state: (closed, open, per-key last FOLDED (ts, tie) — the late
+    // guard's anchor, the TransitionsStream last-event discipline —,
+    // dropped-late count)
+    private val core = new BatchStore[(DataFrame, DataFrame, DataFrame, Long)](
+      (materialize(emptyIntervals), materialize(emptyIntervals), materialize(
+        Seq.empty[(Long, Long, Long)].toDF(keyCol, "last_ts", "last_tie")), 0L),
+      s => Seq(s._1, s._2, s._3),
+      snapshotDir.map(BatchStore.Log(spark, _,
+        tables = Seq("closed", "open", "last_seen", "meta"), nested = true)),
+      Some(s => Seq(s._1, s._2, s._3, Seq(s._4).toDF("dropped_late"))))
+    core.restore((_, t) => (materialize(t(0)), materialize(t(1)),
+      materialize(t(2)), t(3).head.getLong(0)))
 
     /** Closed intervals ∪ open intervals — the full SCD2 table so far. */
-    def history: DataFrame = closedRef.get().unionAll(openRef.get())
+    def history: DataFrame = {
+      val (closed, open, _, _) = core.state
+      closed.unionAll(open)
+    }
 
     /** Rows dropped for violating the ordered-arrival contract so far. */
-    def lateDropped: Long = droppedLate
+    def lateDropped: Long = core.state._4
 
-    /** Fold one micro-batch in. Synchronized single-writer (the
-      * [[CmsStream.SketchStore]] discipline) with a monotone batch-id
-      * guard: replays of a delivered batch are no-ops, so at-least-once
-      * foreachBatch delivery folds each batch exactly once.
-      */
-    def merge(batch: DataFrame, batchId: Long): Boolean = synchronized {
-      if (batchId <= lastBatch) return false
-      val open = openRef.get()
-      val lastSeen = lastSeenRef.get()
+    /** Fold one micro-batch in; replays of a delivered batch are no-ops. */
+    def merge(batch: DataFrame, batchId: Long): Boolean = core(batchId) { state =>
+      val (closed, open, lastSeen, droppedLate) = state
       // late-data policy: a row at or before its key's LAST FOLDED
       // (ts, tie) cannot extend history monotonically — count and drop.
       // Guarding only on the open interval's start would let a row slip
@@ -159,7 +138,7 @@ object Scd2Stream {
           col("valid_from_us"), col("t1").as("valid_to_us"),
           lit(false).as("is_current"))
       val stillOpen = open.join(firstRun, Seq(keyCol), "left_anti")
-      val newClosed = closedRef.get()
+      val newClosed = closed
         .unionAll(closedFromOpen)
         .unionAll(intervals.filter(!col("is_current")))
       val newOpen = stillOpen.unionAll(intervals.filter(col("is_current")))
@@ -172,24 +151,8 @@ object Scd2Stream {
         .agg(max(struct(col("last_ts"), col("last_tie"))).as("l"))
         .select(col(keyCol), col("l.last_ts").as("last_ts"),
           col("l.last_tie").as("last_tie"))
-      val (nc, no, nl) =
-        (materialize(newClosed), materialize(newOpen), materialize(newLastSeen))
-      // durable commit point BEFORE the in-memory swap: all four
-      // sub-stores at batchId, `meta` last (the restore takes the newest
-      // COMMON id, so a crash mid-sequence restores the previous batch)
-      snapshotDir.foreach { d =>
-        SnapshotStore.write(spark, s"$d/closed", nc, batchId)
-        SnapshotStore.write(spark, s"$d/open", no, batchId)
-        SnapshotStore.write(spark, s"$d/last_seen", nl, batchId)
-        SnapshotStore.write(spark, s"$d/meta",
-          Seq(droppedLate + late).toDF("dropped_late"), batchId)
-      }
-      val (oc, oo, ol) = (closedRef.get(), openRef.get(), lastSeenRef.get())
-      closedRef.set(nc); openRef.set(no); lastSeenRef.set(nl)
-      droppedLate += late
-      lastBatch = batchId
-      oc.unpersist(); oo.unpersist(); ol.unpersist()
-      true
+      Step((materialize(newClosed), materialize(newOpen),
+        materialize(newLastSeen), droppedLate + late))
     }
   }
 

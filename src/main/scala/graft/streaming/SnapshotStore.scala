@@ -3,11 +3,13 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared durable-snapshot machinery for the bounded sketch stores
-  * ([[CmsStream.SketchStore]], [[HeavyHittersStream.MgStore]]): one
-  * `upto=<batchId>` parquet directory per applied batch, `_SUCCESS`-gated
-  * completeness, pruned to the newest two (the newest serves restore,
-  * the previous survives a torn newest write).
+/** The on-disk primitives under [[BatchStore.Log]]: `upto=<batchId>`
+  * snapshot directories and `delta=<batchId>` log entries, each holding
+  * one parquet table or one subdirectory per named table, complete iff
+  * every table carries its `_SUCCESS` marker. Snapshots are pruned to
+  * the newest two complete ones (the newest serves restore, the previous
+  * survives a torn newest write); deltas are pruned once a snapshot
+  * supersedes them.
   *
   * Listing and deletion go through Hadoop's `FileSystem` resolved FROM
   * THE SNAPSHOT PATH — the same API the parquet writer uses — so the
@@ -24,182 +26,78 @@ private[graft] object SnapshotStore {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Complete snapshots under `dir`, ascending batch id. */
-  def snapshotIds(spark: SparkSession, dir: String): Seq[(Long, Path)] = {
+  /** Table `name` inside an entry directory ("" = the directory itself). */
+  def path(entry: String, name: String): String =
+    if (name.isEmpty) entry else s"$entry/$name"
+
+  /** `<prefix>=<id>` directories under `dir`, ascending id, keeping only
+    * those where every table in `tables` has its `_SUCCESS` (no tables:
+    * every directory, torn ones included).
+    */
+  def ids(spark: SparkSession, dir: String, prefix: String,
+      tables: Seq[String] = Seq("")): Seq[(Long, Path)] = {
     val (f, p) = fs(spark, dir)
     if (!f.exists(p)) return Seq.empty
     f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("upto="))
-      .filter(st => f.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(st => st.getPath.getName.stripPrefix("upto=").toLong -> st.getPath)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$prefix="))
+      .filter(st => tables.forall(t => f.exists(new Path(
+        if (t.isEmpty) st.getPath else new Path(st.getPath, t), "_SUCCESS"))))
+      .map(st => st.getPath.getName.stripPrefix(s"$prefix=").toLong -> st.getPath)
       .sortBy(_._1)
   }
 
-  /** Write a bounded counter table as the `batchId` snapshot (one file —
-    * the tables are KBs by contract — unless `singleFile=false`, for
-    * corpus-sized state tables that must not funnel through one task),
-    * then prune to the newest two.
-    */
-  def write(spark: SparkSession, dir: String, df: DataFrame,
-      batchId: Long, singleFile: Boolean = true): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode("overwrite").parquet(s"$dir/upto=$batchId")
-    val (f, _) = fs(spark, dir)
-    snapshotIds(spark, dir).dropRight(2).foreach { case (_, p) =>
-      f.delete(p, true)
-    }
-  }
+  /** Complete single-table deltas under `dir`, ascending batch id. */
+  def deltaIds(spark: SparkSession, dir: String): Seq[(Long, Path)] =
+    ids(spark, dir, "delta")
 
-  /** The newest complete snapshot as (batchId, rows), if any. */
+  /** The newest complete single-table snapshot as (batchId, rows), if any. */
   def newest(spark: SparkSession, dir: String): Option[(Long, DataFrame)] =
-    snapshotIds(spark, dir).lastOption.map { case (id, p) =>
+    ids(spark, dir, "upto").lastOption.map { case (id, p) =>
       id -> spark.read.parquet(p.toString)
     }
 
-  // ---- append-only delta log -------------------------------------------
-  //
-  // For APPEND-ONLY state (the ingest-dedup pair table): snapshotting the
-  // whole accumulated table per batch costs O(total) I/O per batch —
-  // quadratic cumulative — and coalesce(1) funnels it through one task.
-  // A delta log writes only each batch's new rows (`delta=<batchId>`,
-  // `_SUCCESS`-gated like snapshots, never pruned): per-batch cost is
-  // O(delta), cumulative cost is O(total) once, and restore is the union
-  // of complete deltas. Correct ONLY when rows are never updated or
-  // deleted and no row lands in two deltas (the caller's dedup contract).
+  /** Write one table as the `batchId` snapshot ([[writeTables]]). */
+  def write(spark: SparkSession, dir: String, df: DataFrame,
+      batchId: Long, singleFile: Boolean = true): Unit =
+    writeTables(spark, dir, Seq("" -> df), batchId, singleFile)
 
-  /** Complete deltas under `dir`, ascending batch id. */
-  def deltaIds(spark: SparkSession, dir: String): Seq[(Long, Path)] = {
-    val (f, p) = fs(spark, dir)
-    if (!f.exists(p)) return Seq.empty
-    f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("delta="))
-      .filter(st => f.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(st => st.getPath.getName.stripPrefix("delta=").toLong -> st.getPath)
-      .sortBy(_._1)
-  }
-
-  /** Write one batch's NEW rows as the `batchId` delta (one file — a
-    * micro-batch's delta is small by construction; overwrite mode so a
-    * torn earlier attempt at the same id is replaced whole).
+  /** Write `tables` as the `batchId` snapshot — one file per table (the
+    * bounded stores' tables are KBs by contract) unless `singleFile=false`,
+    * for corpus-sized state that must not funnel through one task — then
+    * prune to the newest two complete snapshots.
     */
-  def writeDelta(spark: SparkSession, dir: String, df: DataFrame,
-      batchId: Long): Unit =
-    df.coalesce(1).write.mode("overwrite").parquet(s"$dir/delta=$batchId")
-
-  /** The union of all complete deltas as (newest batchId, rows), if any. */
-  def restoreDeltas(spark: SparkSession, dir: String)
-      : Option[(Long, DataFrame)] = {
-    val ids = deltaIds(spark, dir)
-    ids.lastOption.map { case (last, _) =>
-      last -> spark.read.parquet(ids.map(_._2.toString): _*)
+  def writeTables(spark: SparkSession, dir: String,
+      tables: Seq[(String, DataFrame)], batchId: Long,
+      singleFile: Boolean): Unit = {
+    tables.foreach { case (name, df) =>
+      val out = if (singleFile) df.coalesce(1) else df
+      out.write.mode("overwrite").parquet(path(s"$dir/upto=$batchId", name))
     }
-  }
-
-  /** Delete all complete deltas with id ≤ `upto` — the compaction step
-    * after a full snapshot at `upto` has made them redundant.
-    */
-  def pruneDeltas(spark: SparkSession, dir: String, upto: Long): Unit = {
     val (f, _) = fs(spark, dir)
-    deltaIds(spark, dir).takeWhile(_._1 <= upto).foreach { case (_, p) =>
-      f.delete(p, true)
+    ids(spark, dir, "upto", tables.map(_._1)).dropRight(2).foreach {
+      case (_, p) => f.delete(p, true)
     }
   }
 
-  // ---- multi-table deltas --------------------------------------------
-  //
-  // The delta-log idea for MULTI-TABLE stores (transition counts +
-  // last-event rows): one `delta=<batchId>/<name>` dir per table, the
-  // delta complete iff every named table has its `_SUCCESS`. Off-cadence
-  // batches write O(batch) delta rows; the full multi snapshot prunes
-  // the deltas it supersedes.
-
-  /** Complete multi-table deltas under `dir`, ascending batch id. */
-  def deltaMultiIds(spark: SparkSession, dir: String,
-      names: Seq[String]): Seq[(Long, Path)] = {
-    val (f, p) = fs(spark, dir)
-    if (!f.exists(p)) return Seq.empty
-    f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("delta="))
-      .filter(st => names.forall(n =>
-        f.exists(new Path(st.getPath, s"$n/_SUCCESS"))))
-      .map(st => st.getPath.getName.stripPrefix("delta=").toLong -> st.getPath)
-      .sortBy(_._1)
-  }
-
-  /** Write one batch's per-table NEW/changed rows as the `batchId`
-    * multi-table delta (one file per table — a micro-batch's delta is
-    * small by construction; overwrite replaces a torn earlier attempt).
+  /** Write one batch's NEW rows as the `batchId` delta, one file per
+    * table (a micro-batch's delta is small by construction; overwrite
+    * replaces a torn earlier attempt at the same id whole).
     */
-  def writeDeltaMulti(spark: SparkSession, dir: String,
+  def writeDelta(spark: SparkSession, dir: String,
       tables: Seq[(String, DataFrame)], batchId: Long): Unit =
     tables.foreach { case (name, df) =>
       df.coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/delta=$batchId/$name")
+        .parquet(path(s"$dir/delta=$batchId", name))
     }
 
-  /** Delete every `delta=` dir (complete OR torn) with id ≤ `upto` —
-    * the compaction step after a full multi snapshot at `upto`.
+  /** Delete every `delta=` dir (complete or torn) with id ≤ `upto` — the
+    * compaction step after a full snapshot at `upto` has made them
+    * redundant.
     */
-  def pruneDeltasUpTo(spark: SparkSession, dir: String, upto: Long): Unit = {
-    val (f, p) = fs(spark, dir)
-    if (!f.exists(p)) return
-    f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("delta="))
-      .filter(st => st.getPath.getName.stripPrefix("delta=").toLong <= upto)
-      .foreach(st => f.delete(st.getPath, true))
-  }
-
-  // ---- multi-table snapshots ---------------------------------------------
-  //
-  // For stores whose state is SEVERAL tables with different schemas that
-  // must commit together (transition counts + last-event rows): one
-  // `upto=<batchId>/<name>` parquet dir per table, the snapshot complete
-  // iff EVERY named table has its `_SUCCESS` — a crash between table
-  // writes leaves an incomplete snapshot that restore skips, falling back
-  // to the previous complete one (whose batches then replay on the guard).
-
-  /** Complete multi-table snapshots under `dir`, ascending batch id. */
-  def multiIds(spark: SparkSession, dir: String,
-      names: Seq[String]): Seq[(Long, Path)] = {
-    val (f, p) = fs(spark, dir)
-    if (!f.exists(p)) return Seq.empty
-    f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("upto="))
-      .filter(st => names.forall(n =>
-        f.exists(new Path(st.getPath, s"$n/_SUCCESS"))))
-      .map(st => st.getPath.getName.stripPrefix("upto=").toLong -> st.getPath)
-      .sortBy(_._1)
-  }
-
-  /** Write several tables as one `batchId` snapshot, then prune to the
-    * newest two complete snapshots (plus any in-progress newer dir, which
-    * a replay overwrites in place).
-    */
-  def writeMulti(spark: SparkSession, dir: String,
-      tables: Seq[(String, DataFrame)], batchId: Long,
-      singleFile: Boolean = true): Unit = {
-    require(tables.nonEmpty, "need at least one table")
-    tables.foreach { case (name, df) =>
-      val out = if (singleFile) df.coalesce(1) else df
-      out.write.mode("overwrite").parquet(s"$dir/upto=$batchId/$name")
+  def pruneDeltas(spark: SparkSession, dir: String, upto: Long): Unit = {
+    val (f, _) = fs(spark, dir)
+    ids(spark, dir, "delta", Nil).takeWhile(_._1 <= upto).foreach {
+      case (_, p) => f.delete(p, true)
     }
-    val names = tables.map(_._1)
-    val keep = multiIds(spark, dir, names).map(_._1).takeRight(2).toSet
-    val (f, p) = fs(spark, dir)
-    val newestKept = if (keep.isEmpty) Long.MinValue else keep.max
-    f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("upto="))
-      .filter { st =>
-        val id = st.getPath.getName.stripPrefix("upto=").toLong
-        !keep.contains(id) && id < newestKept
-      }
-      .foreach(st => f.delete(st.getPath, true))
   }
-
-  /** The newest complete multi-table snapshot as (batchId, name → rows). */
-  def newestMulti(spark: SparkSession, dir: String,
-      names: Seq[String]): Option[(Long, Map[String, DataFrame])] =
-    multiIds(spark, dir, names).lastOption.map { case (id, p) =>
-      id -> names.map(n => n -> spark.read.parquet(s"$p/$n")).toMap
-    }
 }

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicReference
+import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Temporal
+import graft.streaming.BatchStore.{Step, materialize}
 
 /** Streaming usage-growth monitor — the unbounded twin of
   * [[Temporal.linearTrend]]: an event stream folds into running
@@ -30,69 +30,38 @@ import graft.operators.Temporal
   * drift; EngineSpec pins `current` ≡ `linearTrend(all delivered
   * events)` row-for-row under arbitrary batch splits.
   *
-  * Exactly-once accounting: count merge is not idempotent, so the
-  * monotone batch-id guard drops re-deliveries
-  * ([[CmsStream.SketchStore]] discipline).
+  * Count merge is not idempotent, so exactly-once rests on the
+  * [[BatchStore]] guard.
   */
 object TrendStream {
 
-  /** Running per-(key, day) totals; trends derived at read time. When
-    * `durable` carries a snapshot directory, every applied batch writes
-    * the merged table (keys × active-days bounded by contract) BEFORE
-    * the batch is acknowledged, so a driver restart rebuilds the exact
-    * folded state via [[TrendStore.restore]] and checkpoint-replayed
-    * batches drop on the monotone guard — the [[CusumStream.CusumStore]]
-    * durability shape. A restarted dashboard that silently serves reset
-    * trends is the failure mode this exists to prevent.
+  /** Running per-(key, day) totals; trends derived at read time. Under
+    * the [[BatchStore]] contract; with `durable` every applied batch
+    * snapshots the merged table (keys × active-days bounded by
+    * contract), restored by [[TrendStore.restore]] — a restarted
+    * dashboard that silently serves reset trends is the failure mode
+    * this exists to prevent.
     */
   final class TrendStore(spark: SparkSession, keyCol: String = "user_id",
       tsCol: String = "ts_us", valCol: String = "value",
       rebaseDay: Long = 0L, durable: Option[String] = None) {
     import spark.implicits._
 
-    private def materialize(df: DataFrame): DataFrame = {
-      val cut = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cut.count() // force now: a failed merge must fail BEFORE the swap
-      cut
-    }
+    private val core = new BatchStore[DataFrame](materialize(
+      Seq.empty[(Long, Long, Long)].toDF(keyCol, "x", "y")),
+      Seq(_), durable.map(BatchStore.Log(spark, _)))
 
-    private val runRef = new AtomicReference[DataFrame](materialize(
-      Seq.empty[(Long, Long, Long)].toDF(keyCol, "x", "y")))
-    @volatile private var lastBatch = -1L
-
-    private[streaming] def seed(df: DataFrame, upto: Long): Unit = synchronized {
-      val next = materialize(df.select(col(keyCol), col("x"), col("y")))
-      val old = runRef.get()
-      runRef.set(next)
-      lastBatch = upto
-      old.unpersist()
-    }
-
-    /** Fold one micro-batch's daily totals in; replays drop on the
-      * guard.
-      */
-    def merge(batch: DataFrame, batchId: Long): Boolean = synchronized {
-      if (batchId <= lastBatch) return false
-      val merged = runRef.get()
+    /** Fold one micro-batch's daily totals in. */
+    def merge(batch: DataFrame, batchId: Long): Boolean = core(batchId)(old =>
+      Step(materialize(old
         .unionAll(Temporal.dailyTotals(batch, keyCol, tsCol, valCol, rebaseDay))
         .groupBy(col(keyCol), col("x"))
-        .agg(sum(col("y")).as("y"))
-      val next = materialize(merged)
-      // durable: snapshot BEFORE acknowledging, so a crash between write
-      // and ack only re-folds a batch the guard then drops
-      durable.foreach(dir => SnapshotStore.write(spark, dir, next, batchId))
-      val old = runRef.get()
-      runRef.set(next)
-      lastBatch = batchId
-      old.unpersist()
-      true
-    }
+        .agg(sum(col("y")).as("y")))))
 
     /** Per-key trend of everything delivered so far — exactly
       * [[Temporal.linearTrend]] over the concatenated stream.
       */
-    def current: DataFrame = Temporal.trendFromDaily(runRef.get(), keyCol)
+    def current: DataFrame = Temporal.trendFromDaily(core.state, keyCol)
 
     /** The robust read off the SAME state: exactly
       * [[Temporal.theilSenTrend]] (median-of-slopes + Mann–Kendall S)
@@ -100,30 +69,26 @@ object TrendStream {
       * spike cannot own.
       */
     def currentRobust: DataFrame =
-      Temporal.theilSenFromDaily(runRef.get(), keyCol)
+      Temporal.theilSenFromDaily(core.state, keyCol)
 
     /** The seasonality read off the SAME state: exactly
       * [[Temporal.acfByKey]] over the concatenated stream's daily
       * totals (gap-fill contract inherited from the batch operator).
       */
     def currentAcf(maxLag: Int = 7): DataFrame =
-      Temporal.acfByKey(runRef.get(), keyCol, "x", "y", maxLag)
+      Temporal.acfByKey(core.state, keyCol, "x", "y", maxLag)
   }
 
   object TrendStore {
-    /** Rebuild a durable store from `dir`'s newest complete snapshot —
-      * the restart path; a missing/empty `dir` restores a cold store.
+    /** Rebuild a durable store from `dir` — the restart path; a
+      * missing/empty `dir` restores a cold store.
       */
     def restore(spark: SparkSession, dir: String, keyCol: String = "user_id",
         tsCol: String = "ts_us", valCol: String = "value",
-        rebaseDay: Long = 0L): TrendStore = {
-      val store = new TrendStore(spark, keyCol, tsCol, valCol, rebaseDay,
-        Some(dir))
-      SnapshotStore.newest(spark, dir).foreach { case (upto, df) =>
-        store.seed(df, upto)
-      }
-      store
-    }
+        rebaseDay: Long = 0L): TrendStore =
+      new TrendStore(spark, keyCol, tsCol, valCol, rebaseDay, Some(dir))
+        .tap(_.core.restore((_, t) =>
+          materialize(t.head.select(col(keyCol), col("x"), col("y")))))
   }
 
   /** `(batch, batchId) => Unit` for `writeStream.foreachBatch`. */
@@ -135,9 +100,5 @@ object TrendStream {
     */
   def run(events: DataFrame, store: TrendStore, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink(store))
-      .outputMode("update")
-      .start()
+    BatchStore.run(events, checkpointDir)(sink(store))
 }

@@ -7644,6 +7644,57 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Dedup.uncacheAll()
   }
 
+  test("a failed durable write releases the new state and keeps state and guard") {
+    import spark.implicits._
+    import graft.streaming.CusumStream
+    val root = Files.createTempDirectory("cusumfail")
+    // the snapshot dir sits under a regular file, so every write throws
+    val blocker = Files.createFile(root.resolve("blocker"))
+    val store = new CusumStream.CusumStore(spark, Some(s"$blocker/cusum"))
+    val batch = Seq((1L, 5L), (2L, 7L), (1L, 1L)).toDF("bucket", "v")
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val held = store.sums
+    intercept[Exception](CusumStream.sink(store)(batch, 0L))
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted,
+      "the failed batch's merged frame must be unpersisted")
+    assert(store.sums eq held, "a failed write must keep the served state")
+    // a redelivery into a writable directory applies the batch exactly once
+    Files.delete(blocker)
+    assert(store.merge(batch, 0L), "the failed batch must not have advanced the guard")
+    assert(!store.merge(batch, 0L))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(rows(store.sums) == Set((1L, 6L), (2L, 7L)))
+    assert(rows(CusumStream.CusumStore.restore(spark, s"$blocker/cusum").sums) ==
+      Set((1L, 6L), (2L, 7L)))
+  }
+
+  test("phash stream: a failed compaction write leaves the batch unapplied, so its redelivery counts once") {
+    import spark.implicits._
+    import graft.streaming.PhashStream
+    import graft.operators.Multimodal
+    val dir = Files.createTempDirectory("phashfail")
+    def hashed(ids: Seq[Long]) = Multimodal.imageAHash(
+      Multimodal.synthesizeGradientPayloads(ids.toDF("doc_id")))
+    def reg(st: PhashStream.HashGroupStore) = st.current.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val store = new PhashStream.HashGroupStore(spark,
+      PhashStream.emptyGroups(spark), durable = Some(dir.toString), compactEvery = 1)
+    val full = Files.createFile(dir.resolve("full"))
+    intercept[Exception](PhashStream.sink(store)(
+      Multimodal.synthesizeGradientPayloads((0L until 8L).toDF("doc_id")), 0L))
+    Files.delete(full)
+    PhashStream.sink(store)(
+      Multimodal.synthesizeGradientPayloads((0L until 8L).toDF("doc_id")), 0L)
+    val once = new PhashStream.HashGroupStore(spark, PhashStream.emptyGroups(spark))
+    once.merge(0L, hashed(0L until 8L))
+    assert(reg(once).nonEmpty)
+    assert(reg(store) == reg(once),
+      "n_dups must equal a single application of batch 0")
+    assert(reg(PhashStream.HashGroupStore.restore(spark, dir.toString,
+      compactEvery = 1)) == reg(once))
+  }
+
   test("artifact cache evicts coldest under a byte budget and re-derives on miss") {
     import graft.operators.Dedup
     // dedup_best_rep consumes TWO memoized artifacts (the LSH pair set
