@@ -1,5 +1,6 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets
 import java.time.Instant
 import java.util.concurrent.{Executors, ScheduledExecutorService, ThreadFactory, TimeUnit}
 import java.util.concurrent.atomic.AtomicReference
@@ -10,10 +11,12 @@ import com.esotericsoftware.kryo.{Kryo, KryoSerializable}
 import com.esotericsoftware.kryo.io.{Input, Output}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{ColumnarToRowExec, SQLExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType, StringType}
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One aggregate row per address.
@@ -140,89 +143,191 @@ object DiskUsageOp {
 
 /** Per-address (size_bytes, number_files) partials of one inventory scan:
   * the map-side half of [[DiskUsageOp.aggregate]], folded without a
-  * shuffle. Keys are the UTF-8 bytes of the address (the key before its
-  * first `/`), so a row is folded without decoding it into a `String`.
+  * shuffle from the scan's column batches or rows. Keys are the UTF-8
+  * bytes of the address (the key before its first `/`), so a row is folded
+  * without decoding it into a `String`.
+  *
+  * An open-addressed table over flat arrays: entry `e` is the address of
+  * `lengths(e)` bytes at `offsets(e)` in one byte arena, with its `hashes`,
+  * `sums` and `counts` beside it; `slots` holds entry index + 1 (0 is
+  * empty), probed linearly. The hash is taken in the same pass over the
+  * key bytes that looks for the `/`, so a row costs one pass, one probe
+  * and, for a new address only, a copy of its bytes.
   *
   * Serialized as its entry count and then, per address, the byte length,
   * the bytes and two longs, under Java serialization and Kryo alike.
   */
 private[graft] final class AddressPartials
     extends java.io.Externalizable with KryoSerializable {
-  private var sums = new java.util.HashMap[UTF8String, Array[Long]]()
+  import AddressPartials._
 
-  private def size: Int = sums.size
+  private var size = 0
+  private var slots = new Array[Int](1024)
+  private var offsets = new Array[Int](256)
+  private var lengths = new Array[Int](256)
+  private var hashes = new Array[Int](256)
+  private var sums = new Array[Long](256)
+  private var counts = new Array[Long](256)
+  private var arena = new Array[Byte](4096)
+  private var used = 0
 
-  /** Fold one `(key STRING, size BIGINT)` row. A null key, or a key
-    * without `/`, is dropped (`contains("/")` in [[DiskUsageOp.aggregate]]);
-    * the address is the bytes before the first `/` (`substring_index`;
-    * `/` is one byte that never occurs inside a multi-byte character). A
-    * null size — S3 Inventory's delete markers — adds 0 bytes and 1 file,
-    * as the reference's raw int64 read does. Sums overflow loudly, like
-    * ANSI `SUM`.
-    */
+  /** Fold one `(key STRING, size BIGINT)` row; a null key is dropped. */
   def add(row: InternalRow): AddressPartials = {
-    if (!row.isNullAt(0)) {
-      val key = row.getUTF8String(0)
-      val base = key.getBaseObject
-      val off = key.getBaseOffset
-      val n = key.numBytes
-      var i = 0
-      while (i < n && Platform.getByte(base, off + i) != '/') i += 1
-      if (i < n) {
-        val bytes = if (row.isNullAt(1)) 0L else row.getLong(1)
-        val address = UTF8String.fromAddress(base, off, i) // a view into the row
-        val acc = sums.get(address)
-        if (acc == null) sums.put(address.copy(), Array(bytes, 1L))
-        else {
-          acc(0) = Math.addExact(acc(0), bytes)
-          acc(1) += 1
-        }
-      }
+    if (!row.isNullAt(0)) addKey(row.getUTF8String(0), if (row.isNullAt(1)) 0L else row.getLong(1))
+    this
+  }
+
+  /** Fold one batch of `(key STRING, size BIGINT)` columns; null keys are dropped. */
+  def add(batch: ColumnarBatch): AddressPartials = {
+    val keys = batch.column(0)
+    val bytes = batch.column(1)
+    val rows = batch.numRows
+    var r = 0
+    while (r < rows) {
+      if (!keys.isNullAt(r)) addKey(keys.getUTF8String(r), if (bytes.isNullAt(r)) 0L else bytes.getLong(r))
+      r += 1
     }
     this
+  }
+
+  /** A key without `/` is dropped (`contains("/")` in
+    * [[DiskUsageOp.aggregate]]); the address is the bytes before the first
+    * `/` (`substring_index`; `/` is one byte that never occurs inside a
+    * multi-byte character). Callers pass 0 `bytes` for a null size — S3
+    * Inventory's delete markers — so it adds 0 bytes and 1 file, as the
+    * reference's raw int64 read does. Sums overflow loudly, like ANSI `SUM`.
+    */
+  private def addKey(key: UTF8String, bytes: Long): Unit = {
+    val base = key.getBaseObject
+    val off = key.getBaseOffset
+    val n = key.numBytes
+    var h = HashBasis
+    var i = 0
+    var b: Byte = 0
+    while (i < n && { b = Platform.getByte(base, off + i); b != '/' }) {
+      h = hashStep(h, b)
+      i += 1
+    }
+    if (i < n) upsert(base, off, i, mix(h), bytes, 1L)
+  }
+
+  private def upsert(base: AnyRef, off: Long, n: Int, h: Int, bytes: Long, files: Long): Unit = {
+    val mask = slots.length - 1
+    var s = h & mask
+    var e = slots(s) - 1
+    while (e >= 0 && !(hashes(e) == h && lengths(e) == n &&
+        ByteArrayMethods.arrayEquals(base, off, arena, Platform.BYTE_ARRAY_OFFSET + offsets(e), n))) {
+      s = (s + 1) & mask
+      e = slots(s) - 1
+    }
+    if (e >= 0) {
+      sums(e) = Math.addExact(sums(e), bytes)
+      counts(e) = Math.addExact(counts(e), files)
+    } else {
+      reserve(n)
+      Platform.copyMemory(base, off, arena, Platform.BYTE_ARRAY_OFFSET + used, n)
+      slots(s) = push(n, h, bytes, files) + 1
+      if (2 * size > slots.length) rehash(2 * slots.length)
+    }
+  }
+
+  /** Room for one more entry of `n` address bytes. */
+  private def reserve(n: Int): Unit = {
+    if (size == offsets.length) {
+      val cap = 2 * size
+      offsets = java.util.Arrays.copyOf(offsets, cap)
+      lengths = java.util.Arrays.copyOf(lengths, cap)
+      hashes = java.util.Arrays.copyOf(hashes, cap)
+      sums = java.util.Arrays.copyOf(sums, cap)
+      counts = java.util.Arrays.copyOf(counts, cap)
+    }
+    val need = used.toLong + n
+    if (need > arena.length) {
+      if (need > MaxArena) throw new IllegalStateException(s"more than $MaxArena bytes of addresses")
+      arena = java.util.Arrays.copyOf(arena, math.min(MaxArena, math.max(need, 2L * arena.length)).toInt)
+    }
+  }
+
+  /** Record the `n` bytes at `arena(used)` as a new entry; returns its index. */
+  private def push(n: Int, h: Int, bytes: Long, files: Long): Int = {
+    offsets(size) = used
+    lengths(size) = n
+    hashes(size) = h
+    sums(size) = bytes
+    counts(size) = files
+    used += n
+    size += 1
+    size - 1
+  }
+
+  private def rehash(cap: Int): Unit = {
+    slots = new Array[Int](cap)
+    val mask = cap - 1
+    var e = 0
+    while (e < size) {
+      var s = hashes(e) & mask
+      while (slots(s) != 0) s = (s + 1) & mask
+      slots(s) = e + 1
+      e += 1
+    }
   }
 
   /** Merge two partials; returns the larger, with the smaller folded in. */
   def merge(other: AddressPartials): AddressPartials = {
     val (into, from) = if (size >= other.size) (this, other) else (other, this)
-    from.sums.forEach { (k, v) =>
-      into.sums.merge(k, v, (a, b) => {
-        a(0) = Math.addExact(a(0), b(0))
-        a(1) = Math.addExact(a(1), b(1))
-        a
-      }): Unit
+    var e = 0
+    while (e < from.size) {
+      into.upsert(from.arena, Platform.BYTE_ARRAY_OFFSET + from.offsets(e), from.lengths(e),
+        from.hashes(e), from.sums(e), from.counts(e))
+      e += 1
     }
     into
   }
 
   /** The served lookup map: built once, never mutated afterwards. */
   def served: java.util.Map[String, DiskUsage] = {
-    val m = new java.util.HashMap[String, DiskUsage](AddressPartials.capacity(size))
-    sums.forEach { (k, v) =>
-      val address = k.toString
-      m.put(address, DiskUsage(address, v(0), v(1))): Unit
+    val m = new java.util.HashMap[String, DiskUsage]((size / 0.75).toInt + 1)
+    var e = 0
+    while (e < size) {
+      val address = new String(arena, offsets(e), lengths(e), StandardCharsets.UTF_8)
+      m.put(address, DiskUsage(address, sums(e), counts(e)))
+      e += 1
     }
     m
   }
 
   private def writeTo(out: java.io.DataOutput): Unit = {
     out.writeInt(size)
-    sums.forEach { (k, v) =>
-      out.writeInt(k.numBytes)
-      out.write(k.getBytes)
-      out.writeLong(v(0))
-      out.writeLong(v(1))
+    var e = 0
+    while (e < size) {
+      out.writeInt(lengths(e))
+      out.write(arena, offsets(e), lengths(e))
+      out.writeLong(sums(e))
+      out.writeLong(counts(e))
+      e += 1
     }
   }
 
   private def readFrom(in: java.io.DataInput): Unit = {
     val n = in.readInt()
-    sums = new java.util.HashMap[UTF8String, Array[Long]](AddressPartials.capacity(n))
-    (0 until n).foreach { _ =>
-      val b = new Array[Byte](in.readInt())
-      in.readFully(b)
-      sums.put(UTF8String.fromBytes(b), Array(in.readLong(), in.readLong()))
+    val cap = math.max(n, 1)
+    size = 0
+    used = 0
+    offsets = new Array[Int](cap)
+    lengths = new Array[Int](cap)
+    hashes = new Array[Int](cap)
+    sums = new Array[Long](cap)
+    counts = new Array[Long](cap)
+    arena = new Array[Byte](math.min(16L * cap, MaxArena).toInt)
+    var e = 0
+    while (e < n) {
+      val len = in.readInt()
+      reserve(len)
+      in.readFully(arena, used, len)
+      push(len, hash(arena, used, len), in.readLong(), in.readLong())
+      e += 1
     }
+    rehash(Integer.highestOneBit(math.max(2 * cap, 512)) * 2)
   }
 
   override def writeExternal(out: java.io.ObjectOutput): Unit = writeTo(out)
@@ -236,7 +341,29 @@ private[graft] final class AddressPartials
 }
 
 private[graft] object AddressPartials {
-  private def capacity(n: Int): Int = (n / 0.75).toInt + 1
+  private val MaxArena = Int.MaxValue - 16L
+
+  // FNV-1a over the address bytes, then murmur3's finalizer so that the
+  // low bits that pick a slot depend on every byte
+  private val HashBasis = 0x811c9dc5
+  private def hashStep(h: Int, b: Byte): Int = (h ^ (b & 0xff)) * 0x01000193
+  private def mix(x: Int): Int = {
+    var h = x
+    h ^= h >>> 16
+    h *= 0x85ebca6b
+    h ^= h >>> 13
+    h *= 0xc2b2ae35
+    h ^ (h >>> 16)
+  }
+  private def hash(bytes: Array[Byte], off: Int, n: Int): Int = {
+    var h = HashBasis
+    var i = off
+    while (i < off + n) {
+      h = hashStep(h, bytes(i))
+      i += 1
+    }
+    mix(h)
+  }
 
   /** [[DiskUsageOp.aggregate]] as ONE Spark job that returns its result to
     * the driver: each scan task folds its rows into a partial, and
@@ -246,14 +373,38 @@ private[graft] object AddressPartials {
     * Catalyst plan is kept up to the projection, which prunes the scan to
     * the two columns, and the job runs as one tracked SQL execution, so
     * the UI and `QueryExecutionListener`s see it like any action.
+    *
+    * When the planned projection is only a columnar scan turned into rows
+    * (the source already holds `key STRING, size BIGINT`, so the casts
+    * fold away, and the vectorized reader is on), the tasks fold the
+    * scan's column batches and skip the row conversion. Any other plan —
+    * a row-based source, a cast that is not a no-op, a filter — is folded
+    * row by row.
     */
   def fold(inventory: DataFrame, keyCol: String, sizeCol: String): AddressPartials = {
     val qe = inventory
       .select(col(keyCol).cast("string"), col(sizeCol).cast("long"))
       .queryExecution
     SQLExecution.withNewExecutionId(qe, Some("disk usage refresh")) {
-      qe.toRdd.treeAggregate(new AddressPartials)((p, row) => p.add(row), (a, b) => a.merge(b))
+      val merge = (a: AddressPartials, b: AddressPartials) => a.merge(b)
+      columnarScan(qe.executedPlan) match {
+        case Some(scan) =>
+          scan.executeColumnar().treeAggregate(new AddressPartials)((p, b) => p.add(b), merge)
+        case None =>
+          qe.toRdd.treeAggregate(new AddressPartials)((p, row) => p.add(row), merge)
+      }
     }
+  }
+
+  /** The columnar child of a plan that only converts it to rows, when its
+    * columns are already the fold's `(STRING, BIGINT)`.
+    */
+  private def columnarScan(plan: SparkPlan): Option[SparkPlan] = plan match {
+    case WholeStageCodegenExec(c: ColumnarToRowExec) => columnarScan(c)
+    case ColumnarToRowExec(scan)
+        if scan.supportsColumnar && scan.output.map(_.dataType) == Seq(StringType, LongType) =>
+      Some(scan)
+    case _ => None
   }
 }
 
@@ -268,12 +419,15 @@ final case class RefreshFailure(at: Instant, message: String)
   *    for S3 — SURVEY.md §7.4).
   *  - Construction runs one synchronous refresh (run-at-start, handler.go:58)
   *    so callers can query immediately, then schedules the periodic job
-  *    (handler.go:56-66).
+  *    (handler.go:56-66) with a fixed delay: the next refresh starts
+  *    `refreshEvery` after the previous one ended, so a refresh slower
+  *    than its period is never followed at once by a late tick.
   *  - A refresh is one Spark job ([[AddressPartials.fold]]): scan tasks fold
-  *    per-address partial sums, which merge up a `treeAggregate` tree into
-  *    the map that [[getDiskUsage]] serves — no shuffle, no distributed
-  *    result to collect back. The tree bounds the partials the driver
-  *    merges to about √P for P scan partitions.
+  *    per-address partial sums, straight from the parquet scan's column
+  *    batches when the source is columnar, and the partials merge up a
+  *    `treeAggregate` tree into the map that [[getDiskUsage]] serves — no
+  *    shuffle, no distributed result to collect back. The tree bounds the
+  *    partials the driver merges to about √P for P scan partitions.
   *  - Each refresh fully replaces the served snapshot via AtomicReference swap
   *    — the race-free version of handler.go:30,252,258. A published map is
   *    never mutated.
@@ -332,7 +486,7 @@ final class DiskUsageHandler(
     })
 
   refreshOnce() // handler.go:58 — blocking first refresh
-  exec.scheduleAtFixedRate(
+  exec.scheduleWithFixedDelay(
     () =>
       try refreshOnce()
       catch { // cron.Recover chain, handler.go:48 — survive, keep old snapshot

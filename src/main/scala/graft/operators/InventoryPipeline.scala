@@ -1,10 +1,13 @@
 package graft.operators
 
 import java.time.Instant
+import java.util.concurrent.{ExecutionException, Executors}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.concurrent.duration.FiniteDuration
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -12,7 +15,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.Type
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{Inventory, Manifest}
+import graft.sources.{Inventory, Manifest, ManifestFile}
 
 /** The reference's whole refresh pipeline as one composition
   * (/root/reference/handler.go:77-92): resolve the dated manifest key
@@ -22,11 +25,13 @@ import graft.sources.{Inventory, Manifest}
   *
   * A refresh is one Spark job. The scan reads `key STRING, size BIGINT`
   * with a declared schema, so no schema-inference job runs first; instead
-  * the driver reads the parquet footer of the first listed file and fails
-  * the refresh if `key` (binary) or `size` (int64) is missing — the same
-  * one-file coverage inference gives. The served handler's fold
-  * ([[DiskUsageHandler]]) then merges per-task partials up a
-  * `treeAggregate` tree into the driver's map of all addresses.
+  * the driver reads the parquet footer of every listed file, several at a
+  * time, and fails the refresh if any lacks a binary `key` or an int64
+  * `size`. A serving handler remembers the manifest entries (key, size and
+  * MD5) whose footers passed, so a refresh over files it has already
+  * checked reads no footer. The handler's fold ([[DiskUsageHandler]]) then
+  * merges per-task partials up a `treeAggregate` tree into the driver's
+  * map of all addresses.
   *
   * I/O is injected: `fetch` returns the manifest JSON for a key (None =
   * not found, mapping the reference's ErrNotFound probe,
@@ -38,7 +43,7 @@ object InventoryPipeline {
 
   /** Manifest + `(key, size)` inventory DataFrame for `now`'s day, or
     * yesterday's on fallback; None when neither day has a manifest. Throws
-    * when the manifest's first file lacks either column.
+    * when any listed file lacks either column.
     */
   def inventoryForDay(
       spark: SparkSession,
@@ -46,44 +51,97 @@ object InventoryPipeline {
       prefix: String,
       now: Instant,
       fetch: String => Option[String]): Option[(Inventory, DataFrame)] =
+    resolve(spark, dataRoot, prefix, now, fetch, new CheckedFiles)
+
+  private def resolve(
+      spark: SparkSession,
+      dataRoot: String,
+      prefix: String,
+      now: Instant,
+      fetch: String => Option[String],
+      checked: CheckedFiles): Option[(Inventory, DataFrame)] =
     Manifest
       .resolveWithFallback(now)(ts => fetch(Manifest.manifestKey(prefix, ts)))
       .map(Manifest.parseInventory)
       .map { inv =>
-        val paths = inv.dataPaths(dataRoot)
-        require(paths.nonEmpty, "manifest lists no inventory files")
-        requireColumns(spark, paths.head)
-        (inv, spark.read.schema(schema).parquet(paths: _*))
+        require(inv.files.nonEmpty, "manifest lists no inventory files")
+        requireColumns(spark, inv.files.zip(inv.dataPaths(dataRoot)), checked)
+        (inv, spark.read.schema(schema).parquet(inv.dataPaths(dataRoot): _*))
       }
 
   /** The two inventory columns the pipeline reads (handler.go:205-221). */
   private val schema = "key STRING, size BIGINT"
 
-  /** Fail unless the footer of the first data file under `path` (a file,
-    * or a directory of part files) has a binary `key` and an int64
-    * `size`. Names match case-insensitively, as Spark resolves them.
+  /** Footers read so far, for tests that pin when they are read. */
+  private[graft] val footerReads = new AtomicLong()
+
+  /** Manifest entries whose footers passed, least recently listed evicted
+    * first once there are `MaxChecked`.
     */
-  private def requireColumns(spark: SparkSession, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+  private final class CheckedFiles {
+    private val seen = new java.util.LinkedHashMap[ManifestFile, java.lang.Boolean](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[ManifestFile, java.lang.Boolean]): Boolean =
+        size > MaxChecked
+    }
+    def contains(f: ManifestFile): Boolean = synchronized(seen.get(f) != null)
+    def add(f: ManifestFile): Unit = synchronized(seen.put(f, true)): Unit
+  }
+  private val MaxChecked = 1 << 16
+
+  /** Footers read at once: they are small reads, mostly waiting on storage. */
+  private val FooterReaders = 8
+
+  /** Fail unless every listed file not yet in `checked` has a binary `key`
+    * and an int64 `size` in its footer; the files that pass join `checked`.
+    */
+  private def requireColumns(
+      spark: SparkSession,
+      files: Seq[(ManifestFile, String)],
+      checked: CheckedFiles): Unit = {
+    val todo = files.distinct.filterNot(f => checked.contains(f._1))
+    if (todo.nonEmpty) {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val pool = Executors.newFixedThreadPool(math.min(todo.size, FooterReaders), (r: Runnable) => {
+        val t = new Thread(r, "inventory-footer"); t.setDaemon(true); t
+      })
+      try {
+        val reads = todo.map { case (f, path) => f -> pool.submit[Unit](() => requireColumns(conf, path)) }
+        val failures = reads.flatMap { case (f, read) =>
+          try { read.get(); checked.add(f); None }
+          catch { case e: ExecutionException => Some(e.getCause) }
+        }
+        failures.headOption.foreach(e => throw e)
+      } finally pool.shutdownNow(): Unit
+    }
+  }
+
+  /** Fail unless the footer of `path` (a file, or each data file of a
+    * directory of part files) has a binary `key` and an int64 `size`.
+    * Names match case-insensitively, as Spark resolves them.
+    */
+  private def requireColumns(conf: Configuration, path: String): Unit = {
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
     val status = fs.getFileStatus(root)
-    val file =
-      if (!status.isDirectory) status
-      else fs.listStatus(root).filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith(".")).sortBy(_.getPath.getName).headOption
-        .getOrElse(sys.error(s"no data files under $path"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-    val fields =
-      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq
-      finally reader.close()
-    def need(name: String, t: PrimitiveTypeName): Unit =
-      if (!fields.exists(f => f.getName.equalsIgnoreCase(name) && f.isPrimitive &&
-          !f.isRepetition(Type.Repetition.REPEATED) &&
-          f.asPrimitiveType.getPrimitiveTypeName == t))
-        sys.error(s"inventory file ${file.getPath} has no $t column '$name'")
-    need("key", PrimitiveTypeName.BINARY)
-    need("size", PrimitiveTypeName.INT64)
+    val files =
+      if (!status.isDirectory) Seq(status)
+      else fs.listStatus(root).toSeq.filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith("."))
+    if (files.isEmpty) sys.error(s"no data files under $path")
+    files.foreach { file =>
+      footerReads.incrementAndGet()
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+      val fields =
+        try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq
+        finally reader.close()
+      def need(name: String, t: PrimitiveTypeName): Unit =
+        if (!fields.exists(f => f.getName.equalsIgnoreCase(name) && f.isPrimitive &&
+            !f.isRepetition(Type.Repetition.REPEATED) &&
+            f.asPrimitiveType.getPrimitiveTypeName == t))
+          sys.error(s"inventory file ${file.getPath} has no $t column '$name'")
+      need("key", PrimitiveTypeName.BINARY)
+      need("size", PrimitiveTypeName.INT64)
+    }
   }
 
   /** Serving handler over the manifest-driven pipeline: every refresh
@@ -98,11 +156,13 @@ object InventoryPipeline {
       prefix: String,
       clock: () => Instant,
       fetch: String => Option[String],
-      refreshEvery: FiniteDuration): DiskUsageHandler =
+      refreshEvery: FiniteDuration): DiskUsageHandler = {
+    val checked = new CheckedFiles
     new DiskUsageHandler(
       () =>
-        inventoryForDay(spark, dataRoot, prefix, clock(), fetch)
+        resolve(spark, dataRoot, prefix, clock(), fetch, checked)
           .map(_._2)
           .getOrElse(sys.error("no manifest found for today or yesterday")),
       refreshEvery)
+  }
 }

@@ -402,7 +402,10 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally h.close()
   }
 
-  test("refresh fold equals DiskUsageOp.aggregate at 1 and 64 partitions, in one job") {
+  /** Edge-case keys (no `/`, leading `/`, `a//b`, multi-byte, null keys
+    * and sizes) shuffled into 5000 bulk rows over about 480 addresses.
+    */
+  private lazy val foldRows: Seq[(String, java.lang.Long)] = {
     val rnd = new scala.util.Random(7)
     val edge: Seq[(String, java.lang.Long)] = Seq(
       ("noslash", 100L), ("/leading", 3L), ("/", 4L), ("a//b", 5L), ("a/b/c", 6L),
@@ -412,14 +415,23 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val addr = Seq("alice", "bob", "ünï", "", "日本")(rnd.nextInt(5)) + (i % 97)
       (s"$addr/obj$i", if (i % 50 == 0) null else java.lang.Long.valueOf(rnd.nextInt(1 << 20).toLong))
     }
-    val rows = rnd.shuffle(edge ++ bulk)
+    rnd.shuffle(edge ++ bulk)
+  }
+
+  /** [[DiskUsageOp.aggregate]] as the handler serves it. The reference
+    * sums to NULL where every size is null; the fold serves 0 there (the
+    * null-size test), the only place the two differ.
+    */
+  private def aggregated(inv: org.apache.spark.sql.DataFrame): Map[String, DiskUsage] =
+    DiskUsageOp.aggregate(inv).collect().map(r =>
+      r.getString(0) -> DiskUsage(r.getString(0),
+        if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2))).toMap
+
+  test("refresh fold equals DiskUsageOp.aggregate at 1 and 64 partitions, in one job") {
+    val rows = foldRows
     Seq(1 -> 1, 64 -> 2).foreach { case (parts, stages) =>
       val inv = inventoryIn(rows, parts)
-      // the reference sums to NULL where every size is null; the fold
-      // serves 0 there (previous test), the only place the two differ
-      val want = DiskUsageOp.aggregate(inv).collect().map(r =>
-        r.getString(0) -> DiskUsage(r.getString(0),
-          if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2))).toMap
+      val want = aggregated(inv)
       assert(want.contains("") && want.contains("a") && want.contains("日本") &&
         want.contains("ß") && want("deleted") == DiskUsage("deleted", 0L, 1L))
       var got: Map[String, DiskUsage] = null
@@ -511,6 +523,210 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       deliver("a-nosize", "b-good")
       intercept[Exception](h.refreshOnce())
       assert(h.getDiskUsage("alice").contains(DiskUsage("alice", 10L, 1L)))
+    } finally h.close()
+  }
+
+  /** `rows` written in order as a `key STRING, size BIGINT` parquet
+    * directory of `files` files, with `options` passed to the writer.
+    */
+  private def parquetOf(rows: Seq[(String, java.lang.Long)], files: Int,
+      options: (String, String)*): String = {
+    val dir = Files.createTempDirectory("inv-parquet").toString + "/inv"
+    inventoryIn(rows, files).write.options(options.toMap).parquet(dir)
+    dir
+  }
+
+  private def readInventory(dir: String) = spark.read.schema("key STRING, size BIGINT").parquet(dir)
+
+  /** Runs `body` with the session's SQL `conf` set, then restores it. */
+  private def withSQLConf[T](conf: (String, String)*)(body: => T): T = {
+    val before = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** The executed plan of the refresh fold that `body` runs. */
+  private def refreshPlan(body: => Unit): org.apache.spark.sql.execution.SparkPlan = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        if (name == "disk usage refresh") seen.add(qe)
+      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val qe = seen.poll(10, java.util.concurrent.TimeUnit.SECONDS)
+      assert(qe != null, "no refresh execution reported")
+      qe.executedPlan
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("refresh fold equals DiskUsageOp.aggregate on parquet, vectorized reader on and off") {
+    // repeated keys first, so the key column chunk starts with
+    // dictionary-encoded pages and falls back to plain pages once the
+    // small dictionary fills
+    val repeated: Seq[(String, java.lang.Long)] =
+      (1 to 3000).map(i => (s"dup${i % 30}/o", java.lang.Long.valueOf(i.toLong)))
+    val rows = repeated ++ foldRows
+    val small = Seq("parquet.page.size" -> "1024", "parquet.dictionary.page.size" -> "2048",
+      "parquet.page.size.row.check.min" -> "10", "parquet.page.size.row.check.max" -> "100")
+    val oneFile = parquetOf(rows, 1, small: _*)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val parts = new java.io.File(oneFile).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(parts.length == 1)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(parts.head.toURI), conf))
+    val stats =
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == "key").map(_.getEncodingStats)
+      finally reader.close()
+    assert(stats.exists(s => s.hasDictionaryEncodedPages && s.hasNonDictionaryEncodedPages),
+      "the key column has no chunk with both dictionary-encoded and plain pages")
+    Seq(oneFile -> 1, parquetOf(rows, 64) -> 2).foreach { case (dir, stages) =>
+      val want = aggregated(readInventory(dir))
+      assert(want == aggregated(inventoryIn(rows, 1)))
+      Seq("true", "false").foreach { vectorized =>
+        // one scan partition per file: small files are otherwise packed
+        // into about one partition per core
+        withSQLConf("spark.sql.parquet.enableVectorizedReader" -> vectorized,
+            "spark.sql.files.minPartitionNum" -> "64") {
+          val inv = readInventory(dir)
+          var got: Map[String, DiskUsage] = null
+          assert(jobsAndStages {
+            got = AddressPartials.fold(inv, "key", "size").served.asScala.toMap
+          } == ((1, stages)), s"$dir, vectorized $vectorized")
+          assert(got == want, s"$dir, vectorized $vectorized")
+        }
+      }
+    }
+  }
+
+  test("a vectorized parquet scan is folded from its column batches, a row scan from rows") {
+    val rows = foldRows
+    val dir = parquetOf(rows, 2)
+    val want = aggregated(inventoryIn(rows, 1))
+    Seq(true, false).foreach { vectorized =>
+      withSQLConf("spark.sql.parquet.enableVectorizedReader" -> vectorized.toString) {
+        var got: Map[String, DiskUsage] = null
+        val plan = refreshPlan {
+          got = AddressPartials.fold(readInventory(dir), "key", "size").served.asScala.toMap
+        }
+        assert(got == want)
+        val scanned = plan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.metrics("numOutputRows").value }
+        val converted = plan.collect { case c: org.apache.spark.sql.execution.ColumnarToRowExec =>
+          c.metrics("numOutputRows").value }
+        assert(scanned == Seq(rows.size.toLong), plan.toString)
+        // the columnar plan still ends in a row conversion; the fold
+        // reads the scan below it, so the conversion sees no row
+        assert(converted == (if (vectorized) Seq(0L) else Nil), plan.toString)
+      }
+    }
+  }
+
+  test("an overflowing address sum on a columnar parquet scan fails the refresh and keeps the snapshot") {
+    // one file: the overflow is inside one task; two files: each task's
+    // partial holds one object, and the overflow is in their merge
+    val bad: Seq[(String, java.lang.Long)] = Seq(("u/a", Long.MaxValue), ("u/b", 1L))
+    var dir = parquetOf(Seq(("u/a", 1L)), 1)
+    val h = new DiskUsageHandler(() => readInventory(dir), refreshEvery = 10.minutes)
+    try {
+      Seq(1, 2).foreach { files =>
+        dir = parquetOf(bad, files)
+        intercept[Exception](h.refreshOnce())
+        assert(h.getDiskUsage("u").contains(DiskUsage("u", 1L, 1L)), s"$files files")
+        assert(h.lastFailure.exists(_.message.contains("overflow")), h.lastFailure.toString)
+      }
+      assert(h.refreshCount == 1)
+    } finally h.close()
+  }
+
+  /** A bucket whose manifest for `now` lists the data files `deliver` names. */
+  private final class Delivery {
+    import java.nio.file.Paths
+    val now: java.time.Instant = java.time.Instant.parse("2026-08-12T09:00:00Z")
+    val bucket: String = Files.createTempDirectory("delivery").toString
+    private val key = graft.sources.Manifest.manifestKey("inv/p", now)
+    def write(name: String, rows: org.apache.spark.sql.DataFrame): Unit =
+      rows.coalesce(1).write.parquet(s"$bucket/data/$name")
+    def deliver(files: String*): Unit = {
+      Files.createDirectories(Paths.get(s"$bucket/$key").getParent)
+      Files.writeString(Paths.get(s"$bucket/$key"),
+        files.map(f => s"""{"key":"data/$f","size":1,"MD5checksum":"$f"}""").mkString(
+          """{"sourceBucket":"b","files":[""", ",", "]}"))
+    }
+    private val fetch = (k: String) => {
+      val p = Paths.get(s"$bucket/$k")
+      if (Files.exists(p)) Some(Files.readString(p)) else None
+    }
+    def handler(): DiskUsageHandler = InventoryPipeline.servingHandler(
+      spark, s"file:$bucket", "inv/p", () => now, fetch, refreshEvery = 10.minutes)
+  }
+
+  test("manifest-driven refresh whose later file has no size column fails and keeps the snapshot") {
+    import spark.implicits._
+    val d = new Delivery
+    d.write("a-good", Seq(("alice/a", 10L)).toDF("key", "size"))
+    d.write("b-nosize", Seq(("alice/b", "x")).toDF("key", "other"))
+    d.deliver("a-good")
+    val h = d.handler()
+    try {
+      assert(h.getDiskUsage("alice").contains(DiskUsage("alice", 10L, 1L)))
+      // the good file is first in the manifest and in path order
+      d.deliver("a-good", "b-nosize")
+      val e = intercept[Exception](h.refreshOnce())
+      assert(e.getMessage.contains("b-nosize") && e.getMessage.contains("size"), e.getMessage)
+      assert(h.getDiskUsage("alice").contains(DiskUsage("alice", 10L, 1L)))
+    } finally h.close()
+  }
+
+  test("a serving handler reads each listed file's footer once") {
+    import spark.implicits._
+    val d = new Delivery
+    Seq("f1", "f2", "f3").foreach(f => d.write(f, Seq((s"$f/a", 1L)).toDF("key", "size")))
+    d.deliver("f1", "f2")
+    def reads = InventoryPipeline.footerReads.get
+    val before = reads
+    val h = d.handler()
+    try {
+      assert(reads - before == 2)
+      h.refreshOnce()
+      assert(reads - before == 2, "an unchanged file list was checked again")
+      d.deliver("f1", "f2", "f3")
+      h.refreshOnce()
+      assert(reads - before == 3)
+      assert(h.getDiskUsage("f3").contains(DiskUsage("f3", 1L, 1L)))
+    } finally h.close()
+    // the memo belongs to one handler
+    d.handler().close()
+    assert(reads - before == 6)
+  }
+
+  test("a refresh slower than its period is followed by a full period before the next one") {
+    // a slow refresh ends by failing, so its load knows when it ended
+    val period = 200L
+    val runs = new java.util.concurrent.LinkedBlockingQueue[(Long, Long)]()
+    @volatile var slow = false
+    val h = new DiskUsageHandler(() =>
+      if (!slow) inventoryIn(Seq(("u/a", 1L)), 1)
+      else {
+        val start = System.nanoTime()
+        Thread.sleep(3 * period / 2)
+        runs.add((start, System.nanoTime()))
+        sys.error("slow refresh")
+      }, refreshEvery = period.millis)
+    try {
+      slow = true
+      val spans = (1 to 4).map(_ => runs.poll(10, java.util.concurrent.TimeUnit.SECONDS))
+      assert(!spans.contains(null), "the scheduler stopped running refreshes")
+      spans.zip(spans.tail).foreach { case ((_, end), (start, _)) =>
+        assert(start - end >= (period - 1) * 1000000L, s"${(start - end) / 1e6} ms between refreshes")
+      }
+      assert(h.getDiskUsage("u").contains(DiskUsage("u", 1L, 1L)))
     } finally h.close()
   }
 
