@@ -414,25 +414,31 @@ final case class RefreshFailure(at: Instant, message: String)
 /** Periodic-refresh serving handler: the reference's whole lifecycle
   * (/root/reference/handler.go:39-92,257-262) on Spark.
   *
-  *  - `loadInventory` produces the current inventory DataFrame (manifest
-  *    resolution + multi-path parquet read; injectable so fixtures swap in
-  *    for S3 — SURVEY.md §7.4).
+  *  - `load` resolves one refresh's input: an identity of what it would
+  *    scan (None: unknown) and the inventory DataFrame, built only if the
+  *    refresh folds. The public constructor takes a `loadInventory` with no
+  *    identity; [[InventoryPipeline.servingHandler]] supplies the resolved
+  *    manifest's file list (key, size, MD5 of every file).
   *  - Construction runs one synchronous refresh (run-at-start, handler.go:58)
   *    so callers can query immediately, then schedules the periodic job
   *    (handler.go:56-66) with a fixed delay: the next refresh starts
   *    `refreshEvery` after the previous one ended, so a refresh slower
   *    than its period is never followed at once by a late tick.
-  *  - A refresh is one Spark job ([[AddressPartials.fold]]): scan tasks fold
+  *  - A refresh whose identity equals that of the snapshot being served
+  *    keeps that snapshot: no DataFrame is built and no Spark job runs. It
+  *    still counts in [[refreshCount]] and [[lastSuccess]]. A refresh with
+  *    no identity, or a new one, folds.
+  *  - A fold is one Spark job ([[AddressPartials.fold]]): scan tasks fold
   *    per-address partial sums, straight from the parquet scan's column
   *    batches when the source is columnar, and the partials merge up a
   *    `treeAggregate` tree into the map that [[getDiskUsage]] serves — no
   *    shuffle, no distributed result to collect back. The tree bounds the
   *    partials the driver merges to about √P for P scan partitions.
-  *  - Each refresh fully replaces the served snapshot via AtomicReference swap
-  *    — the race-free version of handler.go:30,252,258. A published map is
-  *    never mutated.
-  *  - A failed refresh KEEPS the previous snapshot and is recorded in
-  *    [[lastFailure]]. This deliberately fixes the reference's
+  *  - A fold replaces the served snapshot via AtomicReference swap — the
+  *    race-free version of handler.go:30,252,258 — and records its
+  *    identity as the one served. A published map is never mutated.
+  *  - A failed refresh KEEPS the previous snapshot and its identity and is
+  *    recorded in [[lastFailure]]. This deliberately fixes the reference's
   *    `log.Fatalf`-kills-the-process behavior on decode errors
   *    (handler.go:176,186,192).
   *
@@ -442,32 +448,52 @@ final case class RefreshFailure(at: Instant, message: String)
   * (cached / complete-mode memory sink) and probe with
   * `filter(col("address") === addr)` — see [[DiskUsageOp.aggregate]].
   */
-final class DiskUsageHandler(
-    loadInventory: () => DataFrame,
+final class DiskUsageHandler private[operators] (
     refreshEvery: FiniteDuration,
-    keyCol: String = "key",
-    sizeCol: String = "size")
+    keyCol: String,
+    sizeCol: String,
+    // last: the public constructor's first parameter is a Function0 too,
+    // and the two constructors must differ after erasure
+    load: () => (Option[Any], () => DataFrame))
     extends AutoCloseable {
+
+  /** A handler whose every refresh folds `loadInventory()`. */
+  def this(
+      loadInventory: () => DataFrame,
+      refreshEvery: FiniteDuration,
+      keyCol: String = "key",
+      sizeCol: String = "size") =
+    this(refreshEvery, keyCol, sizeCol, () => (None, loadInventory))
 
   private val snapshot =
     new AtomicReference[java.util.Map[String, DiskUsage]](java.util.Collections.emptyMap())
   private val refreshes = new java.util.concurrent.atomic.AtomicLong(0L)
   private val failure = new AtomicReference[Option[RefreshFailure]](None)
+  private val success = new AtomicReference[Option[Instant]](None)
+  /** Identity of the input the served snapshot was folded from. */
+  private var served: Option[Any] = None
 
   /** Synchronized: overlapping refreshes (scheduler tick + manual call)
     * would otherwise race compute-then-set and could publish the OLDER
     * inventory's snapshot over the newer one.
     */
   def refreshOnce(): Unit = synchronized {
-    val next =
-      try AddressPartials.fold(loadInventory(), keyCol, sizeCol).served
-      catch {
+    val folded =
+      try {
+        val (identity, inventory) = load()
+        if (identity.isDefined && identity == served) None
+        else Some(identity -> AddressPartials.fold(inventory(), keyCol, sizeCol).served)
+      } catch {
         case NonFatal(e) =>
           failure.set(Some(RefreshFailure(Instant.now(), describe(e))))
           throw e
       }
-    snapshot.set(next) // handler.go:252, race-free
-    refreshes.incrementAndGet(): Unit
+    folded.foreach { case (identity, next) =>
+      snapshot.set(next) // handler.go:252, race-free
+      served = identity
+    }
+    refreshes.incrementAndGet()
+    success.set(Some(Instant.now()))
   }
 
   /** The exception, and its root cause when that is another one: Spark
@@ -501,7 +527,13 @@ final class DiskUsageHandler(
     */
   def getDiskUsage(address: String): Option[DiskUsage] = Option(snapshot.get.get(address))
 
+  /** Refreshes that published a snapshot or kept an unchanged one. */
   def refreshCount: Long = refreshes.get()
+
+  /** When the last refresh that published a snapshot or found its input
+    * unchanged ended; a failed refresh never sets it.
+    */
+  def lastSuccess: Option[Instant] = success.get
 
   /** The most recent failed refresh, scheduled or manual; a later success
     * does not clear it (compare [[refreshCount]] to see one happened).

@@ -23,15 +23,16 @@ import graft.sources.{Inventory, Manifest, ManifestFile}
   * file list as ONE multi-path parquet read (the §2.4 accumulate-not-
   * overwrite fix), aggregate, serve.
   *
-  * A refresh is one Spark job. The scan reads `key STRING, size BIGINT`
-  * with a declared schema, so no schema-inference job runs first; instead
-  * the driver reads the parquet footer of every listed file, several at a
-  * time, and fails the refresh if any lacks a binary `key` or an int64
-  * `size`. A serving handler remembers the manifest entries (key, size and
-  * MD5) whose footers passed, so a refresh over files it has already
-  * checked reads no footer. The handler's fold ([[DiskUsageHandler]]) then
-  * merges per-task partials up a `treeAggregate` tree into the driver's
-  * map of all addresses.
+  * The scan reads `key STRING, size BIGINT` with a declared schema, so no
+  * schema-inference job runs first; instead the driver reads the parquet
+  * footer of every listed file, several at a time, and fails if any lacks
+  * a binary `key` or an int64 `size`. A serving handler resolves the
+  * manifest on every refresh but builds the scan only when the file list
+  * differs from the one it serves (see [[servingHandler]]), and remembers
+  * the manifest entries whose footers passed, so a scan over files it has
+  * already checked reads no footer. The handler's fold
+  * ([[DiskUsageHandler]]) then merges per-task partials up a
+  * `treeAggregate` tree into the driver's map of all addresses.
   *
   * I/O is injected: `fetch` returns the manifest JSON for a key (None =
   * not found, mapping the reference's ErrNotFound probe,
@@ -51,23 +52,23 @@ object InventoryPipeline {
       prefix: String,
       now: Instant,
       fetch: String => Option[String]): Option[(Inventory, DataFrame)] =
-    resolve(spark, dataRoot, prefix, now, fetch, new CheckedFiles)
+    manifestForDay(prefix, now, fetch).map(inv => inv -> scan(spark, dataRoot, inv, new CheckedFiles))
 
-  private def resolve(
-      spark: SparkSession,
-      dataRoot: String,
+  /** The manifest for `now`'s day, or yesterday's on fallback. */
+  private def manifestForDay(
       prefix: String,
       now: Instant,
-      fetch: String => Option[String],
-      checked: CheckedFiles): Option[(Inventory, DataFrame)] =
+      fetch: String => Option[String]): Option[Inventory] =
     Manifest
       .resolveWithFallback(now)(ts => fetch(Manifest.manifestKey(prefix, ts)))
       .map(Manifest.parseInventory)
-      .map { inv =>
-        require(inv.files.nonEmpty, "manifest lists no inventory files")
-        requireColumns(spark, inv.files.zip(inv.dataPaths(dataRoot)), checked)
-        (inv, spark.read.schema(schema).parquet(inv.dataPaths(dataRoot): _*))
-      }
+      .map { inv => require(inv.files.nonEmpty, "manifest lists no inventory files"); inv }
+
+  /** The inventory scan of `inv`'s files, after their footer check. */
+  private def scan(spark: SparkSession, dataRoot: String, inv: Inventory, checked: CheckedFiles): DataFrame = {
+    requireColumns(spark, inv.files.zip(inv.dataPaths(dataRoot)), checked)
+    spark.read.schema(schema).parquet(inv.dataPaths(dataRoot): _*)
+  }
 
   /** The two inventory columns the pipeline reads (handler.go:205-221). */
   private val schema = "key STRING, size BIGINT"
@@ -145,10 +146,14 @@ object InventoryPipeline {
   }
 
   /** Serving handler over the manifest-driven pipeline: every refresh
-    * re-resolves the manifest for the current day — i.e. the cron job of
-    * handler.go:56-66 end to end. Throws at construction if no manifest
-    * exists for today or yesterday (matching the reference's fatal first
-    * run); later refresh failures keep the previous snapshot.
+    * re-resolves the manifest for the current day, with the previous-day
+    * fallback — the cron job of handler.go:56-66 end to end. A refresh
+    * whose resolved manifest lists the same files (key, size and MD5, in
+    * order) as the snapshot being served keeps that snapshot: it reads no
+    * footer, lists no file and runs no Spark job. Any other list is
+    * footer-checked, scanned and folded. Throws at construction if no
+    * manifest exists for today or yesterday (matching the reference's
+    * fatal first run); later refresh failures keep the previous snapshot.
     */
   def servingHandler(
       spark: SparkSession,
@@ -158,11 +163,10 @@ object InventoryPipeline {
       fetch: String => Option[String],
       refreshEvery: FiniteDuration): DiskUsageHandler = {
     val checked = new CheckedFiles
-    new DiskUsageHandler(
-      () =>
-        resolve(spark, dataRoot, prefix, clock(), fetch, checked)
-          .map(_._2)
-          .getOrElse(sys.error("no manifest found for today or yesterday")),
-      refreshEvery)
+    new DiskUsageHandler(refreshEvery, "key", "size", () => {
+      val inv = manifestForDay(prefix, clock(), fetch)
+        .getOrElse(sys.error("no manifest found for today or yesterday"))
+      (Some(inv.files), () => scan(spark, dataRoot, inv, checked))
+    })
   }
 }

@@ -645,26 +645,32 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally h.close()
   }
 
-  /** A bucket whose manifest for `now` lists the data files `deliver` names. */
+  /** A bucket whose manifest for `now` lists the data files `deliver`
+    * names; its handlers' clock reads `today`, which starts at `now`.
+    */
   private final class Delivery {
     import java.nio.file.Paths
     val now: java.time.Instant = java.time.Instant.parse("2026-08-12T09:00:00Z")
+    @volatile var today: java.time.Instant = now
     val bucket: String = Files.createTempDirectory("delivery").toString
     private val key = graft.sources.Manifest.manifestKey("inv/p", now)
     def write(name: String, rows: org.apache.spark.sql.DataFrame): Unit =
-      rows.coalesce(1).write.parquet(s"$bucket/data/$name")
-    def deliver(files: String*): Unit = {
+      rows.coalesce(1).write.mode("overwrite").parquet(s"$bucket/data/$name")
+    /** Lists `data/<name>` with size 1 and the name as its MD5. */
+    def deliver(files: String*): Unit = deliverEntries(files.map(f => (f, 1L, f)): _*)
+    /** Lists `data/<name>` with the given size and MD5. */
+    def deliverEntries(files: (String, Long, String)*): Unit = {
       Files.createDirectories(Paths.get(s"$bucket/$key").getParent)
       Files.writeString(Paths.get(s"$bucket/$key"),
-        files.map(f => s"""{"key":"data/$f","size":1,"MD5checksum":"$f"}""").mkString(
-          """{"sourceBucket":"b","files":[""", ",", "]}"))
+        files.map { case (f, size, md5) => s"""{"key":"data/$f","size":$size,"MD5checksum":"$md5"}""" }
+          .mkString("""{"sourceBucket":"b","files":[""", ",", "]}"))
     }
     private val fetch = (k: String) => {
       val p = Paths.get(s"$bucket/$k")
       if (Files.exists(p)) Some(Files.readString(p)) else None
     }
-    def handler(): DiskUsageHandler = InventoryPipeline.servingHandler(
-      spark, s"file:$bucket", "inv/p", () => now, fetch, refreshEvery = 10.minutes)
+    def handler(every: FiniteDuration = 10.minutes): DiskUsageHandler = InventoryPipeline.servingHandler(
+      spark, s"file:$bucket", "inv/p", () => today, fetch, refreshEvery = every)
   }
 
   test("manifest-driven refresh whose later file has no size column fails and keeps the snapshot") {
@@ -704,6 +710,147 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the memo belongs to one handler
     d.handler().close()
     assert(reads - before == 6)
+  }
+
+  test("a refresh whose manifest lists the files already served keeps the snapshot and runs no job") {
+    import spark.implicits._
+    val d = new Delivery
+    d.write("f1", Seq(("alice/a", 10L)).toDF("key", "size"))
+    d.write("f2", Seq(("alice/b", 5L), ("bob/c", 7L)).toDF("key", "size"))
+    d.deliver("f1", "f2")
+    val h = d.handler()
+    try {
+      val served = h.getDiskUsage("alice").get
+      assert(served == DiskUsage("alice", 15L, 2L))
+      // the same list fetched again; then the next day, which has no
+      // manifest, so the fallback resolves yesterday's list once more
+      Seq(d.now, d.now.plus(1, java.time.temporal.ChronoUnit.DAYS)).foreach { day =>
+        d.today = day
+        val reads = InventoryPipeline.footerReads.get
+        val count = h.refreshCount
+        assert(jobsAndStages(h.refreshOnce()) == ((0, 0)), s"on $day")
+        assert(InventoryPipeline.footerReads.get == reads, s"on $day")
+        assert(h.getDiskUsage("alice").get eq served, s"on $day")
+        assert(h.refreshCount == count + 1, s"on $day")
+      }
+      // a skip reads nothing from storage: not even a listed file's path
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"${d.bucket}/data/f2"))
+      h.refreshOnce()
+      assert(h.getDiskUsage("alice").get eq served)
+    } finally h.close()
+  }
+
+  test("a refresh folds when a listed file's key or size changes under the same MD5") {
+    import spark.implicits._
+    val d = new Delivery
+    val md5 = "0" * 32
+    d.write("a", Seq(("alice/a", 10L)).toDF("key", "size"))
+    d.write("b", Seq(("bob/b", 10L)).toDF("key", "size"))
+    d.deliverEntries(("a", 100L, md5))
+    val h = d.handler()
+    try {
+      assert(h.getDiskUsage("alice").contains(DiskUsage("alice", 10L, 1L)))
+      // another key with the same size and MD5, as file i of two
+      // deliveries can have
+      d.deliverEntries(("b", 100L, md5))
+      assert(jobsAndStages(h.refreshOnce())._1 == 1)
+      assert(h.getDiskUsage("alice").isEmpty)
+      assert(h.getDiskUsage("bob").contains(DiskUsage("bob", 10L, 1L)))
+      // the same key rewritten with a new size
+      d.write("b", Seq(("bob/b", 10L), ("bob/c", 20L)).toDF("key", "size"))
+      d.deliverEntries(("b", 200L, md5))
+      assert(jobsAndStages(h.refreshOnce())._1 == 1)
+      assert(h.getDiskUsage("bob").contains(DiskUsage("bob", 30L, 2L)))
+    } finally h.close()
+  }
+
+  test("a handler built from a DataFrame loader folds on every refresh") {
+    val h = new DiskUsageHandler(() => inventoryIn(Seq(("u/a", 1L)), 1), refreshEvery = 10.minutes)
+    try {
+      val first = h.getDiskUsage("u").get
+      assert(jobsAndStages(h.refreshOnce())._1 == 1)
+      assert(h.getDiskUsage("u").contains(first) && !(h.getDiskUsage("u").get eq first))
+      assert(h.refreshCount == 2)
+    } finally h.close()
+  }
+
+  test("a refresh over a missing or non-parquet file fails, and the same list folds once it is back") {
+    import spark.implicits._
+    val d = new Delivery
+    def restore(): Unit = d.write("f2", Seq(("bob/b", 2L)).toDF("key", "size"))
+    Seq("f1", "f3").foreach(f => d.write(f, Seq(("alice/" + f, 1L)).toDF("key", "size")))
+    restore()
+    val f2 = new java.io.File(s"${d.bucket}/data/f2")
+    val breaks = Seq[(String, () => Unit)](
+      "missing" -> (() => org.apache.hadoop.fs.FileUtil.fullyDelete(f2): Unit),
+      "not parquet" -> (() => {
+        org.apache.hadoop.fs.FileUtil.fullyDelete(f2)
+        Files.write(f2.toPath, "not a parquet file".getBytes): Unit
+      }))
+    d.deliver("f1", "f3")
+    val h = d.handler()
+    try breaks.foreach { case (what, break) =>
+      val served = h.getDiskUsage("alice").get
+      assert(served == DiskUsage("alice", 2L, 2L), what)
+      break()
+      d.deliver("f1", "f2", "f3")
+      val before = java.time.Instant.now()
+      val e = intercept[Exception](h.refreshOnce())
+      assert(e.toString.contains("data/f2"), s"$what: $e")
+      assert(h.getDiskUsage("alice").get eq served, what)
+      assert(h.getDiskUsage("bob").isEmpty, what)
+      assert(h.lastFailure.exists(f => !f.at.isBefore(before) && f.message.contains("data/f2")),
+        s"$what: ${h.lastFailure}")
+      // the same list, now readable: the failed refresh did not mark it served
+      restore()
+      h.refreshOnce()
+      assert(h.getDiskUsage("alice").contains(served), what)
+      assert(h.getDiskUsage("bob").contains(DiskUsage("bob", 2L, 1L)), what)
+      d.deliver("f1", "f3")
+      h.refreshOnce()
+    } finally h.close()
+  }
+
+  test("a scheduled refresh on a day with no manifest for it or the day before fails and keeps the snapshot") {
+    import spark.implicits._
+    val d = new Delivery
+    d.write("f1", Seq(("alice/a", 10L)).toDF("key", "size"))
+    d.deliver("f1")
+    val h = d.handler(100.millis)
+    try {
+      val served = h.getDiskUsage("alice").get
+      d.today = d.now.plus(2, java.time.temporal.ChronoUnit.DAYS)
+      val deadline = System.currentTimeMillis() + 10000
+      while (h.lastFailure.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(h.lastFailure.exists(_.message.contains("no manifest found")), h.lastFailure.toString)
+      assert(h.getDiskUsage("alice").get eq served)
+    } finally h.close()
+  }
+
+  test("lastSuccess is set by a fold and by an unchanged list, never by a failure") {
+    import spark.implicits._
+    val d = new Delivery
+    Seq("f1", "f2").foreach(f => d.write(f, Seq((s"$f/a", 1L)).toDF("key", "size")))
+    d.deliver("f1")
+    val start = java.time.Instant.now()
+    val h = d.handler()
+    try {
+      def after(mark: java.time.Instant) = h.lastSuccess.exists(!_.isBefore(mark))
+      // instants taken between refreshes, so each check sees a later one
+      def mark(): java.time.Instant = { Thread.sleep(2); java.time.Instant.now() }
+      assert(after(start), h.lastSuccess.toString)
+      val unchanged = mark()
+      h.refreshOnce()
+      assert(after(unchanged), "an unchanged list did not count as a success")
+      val kept = h.lastSuccess
+      d.deliver("f1", "missing")
+      intercept[Exception](h.refreshOnce())
+      assert(h.lastFailure.nonEmpty && h.lastSuccess == kept)
+      val folded = mark()
+      d.deliver("f1", "f2")
+      h.refreshOnce()
+      assert(after(folded) && h.getDiskUsage("f2").nonEmpty)
+    } finally h.close()
   }
 
   test("a refresh slower than its period is followed by a full period before the next one") {
