@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -417,12 +418,11 @@ object TextAnalysis {
     * Why a sketch when `groupBy(token).count()` exists: the exact count's
     * hash-aggregation state grows with DISTINCT-key cardinality — at
     * 100 TB of web tokens that state is what OOMs, not the data volume.
-    * The CMS aggregation state is d·w counters per task REGARDLESS of
-    * cardinality, so map-side partial aggregation collapses every
-    * partition to ≤ d·w rows before the exchange: shuffle volume is
-    * bounded by tasks × d·w, not by the token stream. The counter table
-    * (d·w longs) collects to the driver and folds back as a literal map;
-    * probe estimation is row-local.
+    * The CMS state is d·w counters per task REGARDLESS of cardinality:
+    * each task folds its tokens into a dense counter table and the tables
+    * add up a `treeAggregate` tree ([[cmsFold]]) — no exchange, one job.
+    * The counter table (d·w longs) reaches the driver and folds back as a
+    * literal map; probe estimation is row-local.
     *
     * Hashes are the repo's engine-portable md5-prefix discipline
     * (row j hashes `j || ':' || token`), so the oracle replays the whole
@@ -430,10 +430,17 @@ object TextAnalysis {
     */
   def cmsTokenEstimates(docs: DataFrame, probes: DataFrame,
       width: Int = 64, depth: Int = 3,
-      textCol: String = "text", probeCol: String = "token"): DataFrame = {
+      textCol: String = "text", probeCol: String = "token"): DataFrame =
+    cmsProbe(cmsFold(docs, width, depth, textCol), probes, width, depth, probeCol)
+
+  /** The counter table's shape: `width >= 2`, `depth >= 1`, and at most
+    * `Int.MaxValue` counters, the dense fold's array bound.
+    */
+  private[graft] def cmsShape(width: Int, depth: Int): Unit = {
     require(width >= 2 && depth >= 1, s"need width>=2, depth>=1: $width/$depth")
-    cmsProbe(cmsCollect(cmsCells(docs, width, depth, textCol), width),
-      probes, width, depth, probeCol)
+    require(width.toLong * depth <= Int.MaxValue,
+      s"CMS table of width $width × depth $depth = ${width.toLong * depth} " +
+        s"counters exceeds ${Int.MaxValue}, the dense fold's array bound")
   }
 
   /** The CMS row hash: `md5(j || ':' || token)` 4-hex prefix mod width —
@@ -443,27 +450,43 @@ object TextAnalysis {
     conv(substring(md5(concat(lit(s"$j:"), t)), 1, 4), 16, 10)
       .cast("long") % width
 
-  /** The distributed build half of the sketch: token stream → (j, b, n)
-    * counter cells, map-side combined to ≤ d·w rows per task partial.
-    */
-  private[graft] def cmsCells(
-      docs: DataFrame, width: Int, depth: Int, textCol: String): DataFrame =
-    docs
-      .select(explode(tokens(col(textCol))).as("t"))
-      .select(explode(array((0 until depth).map(j =>
-        struct(lit(j).as("j"), cmsBucket(j, col("t"), width).as("b"))): _*)).as("jb"))
-      .groupBy(col("jb.j").as("j"), col("jb.b").as("b"))
-      .agg(count(lit(1)).as("n"))
-
-  /** Collect the (bounded, d·w) counter table as the flat driver map keyed
-    * `j·width + b`. Counter maps from different corpora/batches MERGE by
-    * key-wise addition — the property the streaming twin
+  /** Build the counter table in ONE Spark job, as the flat driver map
+    * keyed `j·width + b` of every non-zero counter. Catalyst projects each
+    * token to its `depth` buckets ([[cmsBucket]]); each task adds its
+    * rows into a dense `Array[Long](depth·width)` (8·d·w bytes, allocated
+    * at its first row, so an empty partition ships nothing) and
+    * `treeAggregate` adds the arrays, inside one tracked SQL execution —
+    * no exchange, so one job where a `groupBy` is two under AQE (a map
+    * stage, then the result). Counter maps from different corpora or
+    * batches MERGE by key-wise addition — the property the streaming twin
     * ([[graft.streaming.CmsStream]]) is built on.
     */
-  private[graft] def cmsCollect(cells: DataFrame, width: Int): Map[Long, Long] =
-    cells.collect()
-      .map(r => (r.getInt(0).toLong * width + r.getLong(1)) -> r.getLong(2))
-      .toMap
+  private[graft] def cmsFold(
+      docs: DataFrame, width: Int, depth: Int, textCol: String): Map[Long, Long] = {
+    cmsShape(width, depth)
+    val qe = docs
+      .select(explode(tokens(col(textCol))).as("t"))
+      .select((0 until depth).map(j => cmsBucket(j, col("t"), width)): _*)
+      .queryExecution
+    val size = width * depth
+    val table = SQLExecution.withNewExecutionId(qe, Some("count-min sketch")) {
+      qe.toRdd.treeAggregate(Array.emptyLongArray)(
+        (acc, row) => {
+          val a = if (acc.length == 0) new Array[Long](size) else acc
+          var j = 0
+          while (j < depth) {
+            a(j * width + row.getLong(j).toInt) += 1
+            j += 1
+          }
+          a
+        },
+        (a, b) =>
+          if (a.length == 0) b
+          else if (b.length == 0) a
+          else { var i = 0; while (i < size) { a(i) += b(i); i += 1 }; a })
+    }
+    table.iterator.zipWithIndex.collect { case (n, i) if n != 0 => i.toLong -> n }.toMap
+  }
 
   /** The row-local probe half: estimate = min over rows of the addressed
     * counter (absent counter = 0).

@@ -27,8 +27,11 @@ import org.apache.spark.storage.StorageLevel
   *  3. Commit. With a log, the batch lands durably BEFORE the sink
   *     returns, i.e. before the streaming checkpoint commits it: a full
   *     snapshot of the next state when the cadence is due, otherwise the
-  *     batch's delta. A step may commit nothing (an empty batch that left
-  *     the state as it was): its replay after a restart is a no-op.
+  *     batch's delta. A driver-map state gives its snapshot as `rows`,
+  *     which the driver writes itself (one parquet file per table, no
+  *     Spark job); a DataFrame state's frames go through Spark's writer.
+  *     A step may commit nothing (an empty batch that left the state as
+  *     it was): its replay after a restart is a no-op.
   *  4. Swap. The next state and the advanced guard are published in one
   *     atomic write; a reader never sees one without the other.
   *  5. Prune. After a snapshot, the deltas it supersedes are deleted.
@@ -55,10 +58,13 @@ import org.apache.spark.storage.StorageLevel
   *               replaced (none for a driver map)
   * @param tables the tables a snapshot writes, in `log.tables` order
   *               (default: the state's frames)
+  * @param rows   a driver-held state's snapshot tables, in `log.tables`
+  *               order, written by the driver instead of Spark
   */
 private[streaming] final class BatchStore[S](initial: S,
     frames: S => Seq[DataFrame], log: Option[BatchStore.Log] = None,
-    tables: Option[S => Seq[DataFrame]] = None) {
+    tables: Option[S => Seq[DataFrame]] = None,
+    rows: Option[S => Seq[SnapshotStore.Rows]] = None) {
   import BatchStore._
 
   // state and guard in ONE reference: the swap publishes both at once
@@ -79,8 +85,11 @@ private[streaming] final class BatchStore[S](initial: S,
     val ((next, snapped), made) = tracked {
       val st = step(cur)
       if (st.commit) durable.foreach { l =>
-        if (due) l.snapshot(batchId, tables.fold(frames(st.next))(_(st.next)))
-        else l.delta(batchId, st.delta)
+        if (!due) l.delta(batchId, st.delta)
+        else rows match {
+          case Some(r) => l.snapshotRows(batchId, r(st.next))
+          case None => l.snapshot(batchId, tables.fold(frames(st.next))(_(st.next)))
+        }
       }
       (st.next, due && st.commit)
     }
@@ -155,6 +164,12 @@ private[streaming] object BatchStore {
       }
       else SnapshotStore.writeTables(spark, dir, tables.zip(dfs), id,
         singleFile = deltas.isEmpty)
+
+    /** Driver-held snapshot tables, written by the driver (not nested). */
+    def snapshotRows(id: Long, rows: Seq[SnapshotStore.Rows]): Unit = {
+      require(!nested, "driver-written snapshots are not nested")
+      SnapshotStore.writeRows(spark, dir, tables.zip(rows), id)
+    }
 
     def delta(id: Long, dfs: Seq[DataFrame]): Unit =
       deltas.foreach(SnapshotStore.writeDelta(spark, _, tables.zip(dfs), id))

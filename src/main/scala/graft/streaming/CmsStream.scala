@@ -2,7 +2,8 @@ package graft.streaming
 
 import scala.util.chaining._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.TextAnalysis
 import graft.streaming.BatchStore.Step
@@ -16,14 +17,15 @@ import graft.streaming.BatchStore.Step
   * build's training-data-pipeline extension mandate.
   *
   * Why this shape: CMS counter tables MERGE by key-wise addition — the
-  * same property that lets the batch operator's map-side partials combine
-  * makes the micro-batch the unit of merge here. Each batch runs the
-  * distributed build half ([[TextAnalysis.cmsCells]], map-side combined to
-  * ≤ d·w rows per task partial), collects the BOUNDED d·w counter table,
-  * and adds it into the driver-held running map. Holding the merged
-  * counters on the driver is not a scale compromise — a bounded driver
-  * sketch is the entire point of CMS (the alternative, exact distinct-key
-  * counting state, is what stops fitting); d·w longs serve any probe rate.
+  * same property that lets the batch operator's per-task tables add up
+  * makes the micro-batch the unit of merge here. Each batch is ONE Spark
+  * job ([[TextAnalysis.cmsFold]]): every task folds its tokens into a
+  * dense d·w counter table, the tables add up a `treeAggregate` tree to
+  * the driver, and the non-zero counters add into the driver-held running
+  * map. Holding the merged counters on the driver is not a scale
+  * compromise — a bounded driver sketch is the entire point of CMS (the
+  * alternative, exact distinct-key counting state, is what stops
+  * fitting); d·w longs serve any probe rate.
   *
   * Counting is NOT idempotent (re-adding a delivered batch double-counts),
   * so exactly-once rests on the [[BatchStore]] guard.
@@ -33,18 +35,19 @@ object CmsStream {
   /** Running counter map (key `j·width + b`), merged per micro-batch under
     * the [[BatchStore]] exactly-once contract. With `durable =
     * Some((spark, dir))` every applied batch snapshots the merged counter
-    * table (d·w rows — a few KB) to `dir/upto=<batchId>`; reads
-    * ([[counters]], [[estimates]]) are lock-free on the immutable map.
+    * table (≤ d·w rows of `cell`/`n` BIGINT — a few KB) to
+    * `dir/upto=<batchId>`, written by the driver from the map it already
+    * holds (no Spark job); reads ([[counters]], [[estimates]]) are
+    * lock-free on the immutable map. `width · depth` must fit an `Int`
+    * (the dense fold's array bound).
     */
   final class SketchStore(val width: Int, val depth: Int,
       durable: Option[(SparkSession, String)] = None) {
-    require(width >= 2 && depth >= 1, s"need width>=2, depth>=1: $width/$depth")
+    TextAnalysis.cmsShape(width, depth)
     private val core = new BatchStore[Map[Long, Long]](Map.empty, _ => Nil,
       durable.map { case (spark, dir) => BatchStore.Log(spark, dir) },
-      durable.map { case (spark, _) => (m: Map[Long, Long]) =>
-        import spark.implicits._
-        Seq(m.toSeq.toDF("cell", "n"))
-      })
+      rows = Some(m => Seq(SnapshotStore.Rows(SketchStore.CellSchema,
+        m.view.map { case (c, n) => Row(c, n) }))))
 
     def counters: Map[Long, Long] = core.state
 
@@ -68,6 +71,10 @@ object CmsStream {
   }
 
   object SketchStore {
+    private val CellSchema = StructType(Seq(
+      StructField("cell", LongType, nullable = false),
+      StructField("n", LongType, nullable = false)))
+
     /** Rebuild a durable store from `dir` (any Spark-writable scheme) —
       * the restart path, [[BatchStore.restore]]; a missing or empty `dir`
       * restores a cold store.
@@ -78,15 +85,12 @@ object CmsStream {
         (_, t) => t.head.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
   }
 
-  /** `(batch, batchId) => Unit` for `writeStream.foreachBatch`: run the
-    * distributed build half on the batch, collect the bounded cell table,
-    * merge.
+  /** `(batch, batchId) => Unit` for `writeStream.foreachBatch`: fold the
+    * batch's counter table in one job, merge.
     */
   def sink(store: SketchStore, textCol: String = "text"): (DataFrame, Long) => Unit =
     (batch, batchId) =>
-      store.add(batchId, TextAnalysis.cmsCollect(
-        TextAnalysis.cmsCells(batch, store.width, store.depth, textCol),
-        store.width))
+      store.add(batchId, TextAnalysis.cmsFold(batch, store.width, store.depth, textCol))
 
   /** Wire a streaming document source into `store` and start the query;
     * callers probe `store.estimates(...)` at any time.

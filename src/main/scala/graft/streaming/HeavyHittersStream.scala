@@ -2,8 +2,9 @@ package graft.streaming
 
 import scala.util.chaining._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.TextAnalysis
 import graft.streaming.BatchStore.Step
@@ -71,18 +72,17 @@ object HeavyHittersStream {
 
   /** Running MG summary, merged per micro-batch under the [[BatchStore]]
     * exactly-once contract; with `durable` the merged ≤ k summary
-    * snapshots every applied batch. Reads are lock-free on the immutable
-    * map.
+    * snapshots every applied batch as `token` STRING / `count` BIGINT
+    * rows, written by the driver from the map it already holds (no Spark
+    * job). Reads are lock-free on the immutable map.
     */
   final class MgStore(val k: Int,
       durable: Option[(SparkSession, String)] = None) {
     require(k >= 2, s"k must be >= 2: $k")
     private val core = new BatchStore[Map[String, Long]](Map.empty, _ => Nil,
       durable.map { case (spark, dir) => BatchStore.Log(spark, dir) },
-      durable.map { case (spark, _) => (m: Map[String, Long]) =>
-        import spark.implicits._
-        Seq(m.toSeq.toDF("token", "count"))
-      })
+      rows = Some(m => Seq(SnapshotStore.Rows(MgStore.SummarySchema,
+        m.view.map { case (t, c) => Row(t, c) }))))
 
     /** Current summary: ≤ k (token, lower-bound count) pairs. */
     def summary: Map[String, Long] = core.state
@@ -98,6 +98,10 @@ object HeavyHittersStream {
   }
 
   object MgStore {
+    private val SummarySchema = StructType(Seq(
+      StructField("token", StringType),
+      StructField("count", LongType, nullable = false)))
+
     /** Rebuild a durable store from `dir` — the restart path,
       * [[BatchStore.restore]]; a missing or empty `dir` restores a cold
       * store.

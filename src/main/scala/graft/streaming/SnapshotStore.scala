@@ -1,7 +1,15 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** The on-disk primitives under [[BatchStore.Log]]: `upto=<batchId>`
   * snapshot directories and `delta=<batchId>` log entries, each holding
@@ -11,13 +19,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * survives a torn newest write); deltas are pruned once a snapshot
   * supersedes them.
   *
-  * Listing and deletion go through Hadoop's `FileSystem` resolved FROM
-  * THE SNAPSHOT PATH — the same API the parquet writer uses — so the
-  * snapshot dir may live on any Spark-writable scheme (`hdfs://`,
-  * `s3a://`, `file:`, a bare local path). A `java.io.File` lister would
-  * silently see nothing on a remote scheme and a restart would
-  * cold-start while the checkpoint marks batches delivered — exactly
-  * the loss the durability contract exists to prevent.
+  * A DataFrame table is written by Spark's parquet writer. A table the
+  * driver already holds ([[Rows]], the bounded sketches' few-KB state) is
+  * written by the driver itself, with parquet-hadoop, as one parquet file
+  * followed by `_SUCCESS` — the same layout and column types Spark's
+  * writer gives, so either reads back through `spark.read.parquet`, with
+  * no Spark job per commit.
+  *
+  * Listing, deletion and the driver's writes go through Hadoop's
+  * `FileSystem` resolved FROM THE SNAPSHOT PATH — the same API the parquet
+  * writer uses — so the snapshot dir may live on any Spark-writable scheme
+  * (`hdfs://`, `s3a://`, `file:`, a bare local path). A `java.io.File`
+  * lister would silently see nothing on a remote scheme and a restart
+  * would cold-start while the checkpoint marks batches delivered —
+  * exactly the loss the durability contract exists to prevent.
   */
 private[graft] object SnapshotStore {
 
@@ -73,8 +88,56 @@ private[graft] object SnapshotStore {
       val out = if (singleFile) df.coalesce(1) else df
       out.write.mode("overwrite").parquet(path(s"$dir/upto=$batchId", name))
     }
+    prune(spark, dir, tables.map(_._1))
+  }
+
+  /** A table the driver holds: its schema (BIGINT and STRING columns) and
+    * its rows.
+    */
+  final case class Rows(schema: StructType, rows: Iterable[Row]) {
+    require(schema.forall(f => f.dataType == LongType || f.dataType == StringType),
+      s"a driver-written table holds BIGINT and STRING columns: $schema")
+  }
+
+  /** Write driver-held `tables` as the `batchId` snapshot, on the driver:
+    * per table, the entry directory is replaced by one parquet file and
+    * its `_SUCCESS`; then prune to the newest two complete snapshots.
+    */
+  def writeRows(spark: SparkSession, dir: String,
+      tables: Seq[(String, Rows)], batchId: Long): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    tables.foreach { case (name, t) => writeFile(conf, path(s"$dir/upto=$batchId", name), t) }
+    prune(spark, dir, tables.map(_._1))
+  }
+
+  private def writeFile(conf: Configuration, dir: String, t: Rows): Unit = {
+    val out = new Path(dir)
+    val f = out.getFileSystem(conf)
+    f.delete(out, true)
+    // the parquet schema Spark's own writer derives from `t.schema`
+    val msg = new SparkToParquetSchemaConverter(SQLConf.get).convert(t.schema)
+    val groups = new SimpleGroupFactory(msg)
+    val w = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(new Path(out, "part-00000.snappy.parquet"), conf))
+      .withConf(conf).withType(msg)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .build()
+    val strings = t.schema.fields.map(_.dataType == StringType)
+    try t.rows.foreach { r =>
+      val g = groups.newGroup()
+      strings.indices.foreach { i =>
+        if (!r.isNullAt(i)) {
+          if (strings(i)) g.add(i, r.getString(i)) else g.add(i, r.getLong(i))
+        }
+      }
+      w.write(g)
+    } finally w.close()
+    f.create(new Path(out, "_SUCCESS")).close()
+  }
+
+  private def prune(spark: SparkSession, dir: String, tables: Seq[String]): Unit = {
     val (f, _) = fs(spark, dir)
-    ids(spark, dir, "upto", tables.map(_._1)).dropRight(2).foreach {
+    ids(spark, dir, "upto", tables).dropRight(2).foreach {
       case (_, p) => f.delete(p, true)
     }
   }

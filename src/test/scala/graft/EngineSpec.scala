@@ -3844,6 +3844,135 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"restored ${h2.summary} vs uninterrupted ${href.summary}")
   }
 
+  test("durable sketch snapshots: driver-written files read back, prune keeps two, a torn newest restores the previous") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import graft.streaming.{CmsStream, HeavyHittersStream}
+    val dir = Files.createTempDirectory("sketchsnap").toString
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def entries(d: String) = new java.io.File(d).listFiles().map(_.getName).sorted.toSeq
+    val cms = new CmsStream.SketchStore(64, 3, Some((spark, s"$dir/cms")))
+    (0 until 4).foreach(i => assert(cms.add(i.toLong, Map(i.toLong -> (i + 1L), 100L -> 1L))))
+    assert(entries(s"$dir/cms") == Seq("upto=2", "upto=3"),
+      "prune must keep exactly the newest two snapshots")
+    // one part file plus `_SUCCESS`, read through Spark with the old
+    // names and types
+    def onePart(d: String) = {
+      val names = entries(d).filterNot(_.startsWith("."))
+      names.contains("_SUCCESS") && names.count(_.endsWith(".parquet")) == 1 && names.size == 2
+    }
+    assert(onePart(s"$dir/cms/upto=3"), entries(s"$dir/cms/upto=3"))
+    val cells = spark.read.parquet(s"$dir/cms/upto=3")
+    assert(cells.schema.map(f => f.name -> f.dataType) == Seq("cell" -> LongType, "n" -> LongType))
+    assert(cells.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == cms.counters)
+    val mg = new HeavyHittersStream.MgStore(4, Some((spark, s"$dir/mg")))
+    assert(mg.add(0L, Map("a" -> 5L, "é" -> 2L)))
+    val summary = spark.read.parquet(s"$dir/mg/upto=0")
+    assert(summary.schema.map(f => f.name -> f.dataType) ==
+      Seq("token" -> StringType, "count" -> LongType))
+    assert(summary.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == mg.summary)
+
+    // a torn batch-4 write: a part file but no `_SUCCESS`
+    val at3 = cms.counters
+    import spark.implicits._
+    Seq((0L, 999L)).toDF("cell", "n").coalesce(1).write.parquet(s"$dir/cms/upto=4")
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$dir/cms/upto=4/_SUCCESS"), false))
+    val restored = CmsStream.SketchStore.restore(spark, s"$dir/cms", 64, 3)
+    assert(restored.lastApplied == 3L && restored.counters == at3,
+      "a newest snapshot without _SUCCESS must not restore")
+    // the replay of batch 4 replaces the torn directory whole
+    assert(restored.add(4L, Map(7L -> 1L)))
+    assert(onePart(s"$dir/cms/upto=4"), entries(s"$dir/cms/upto=4"))
+    val again = CmsStream.SketchStore.restore(spark, s"$dir/cms", 64, 3)
+    assert(again.lastApplied == 4L && again.counters == restored.counters)
+    assert(entries(s"$dir/cms") == Seq("upto=3", "upto=4"))
+
+    // a failed driver write fails the batch with state and guard kept;
+    // its redelivery applies it once
+    val blocked = new java.io.File(dir, "blocked")
+    assert(blocked.createNewFile())
+    val failing = new CmsStream.SketchStore(64, 3, Some((spark, s"$blocked/cms")))
+    intercept[java.io.IOException](failing.add(0L, Map(1L -> 1L)))
+    assert(failing.lastApplied == -1L && failing.counters.isEmpty)
+    assert(blocked.delete())
+    assert(failing.add(0L, Map(1L -> 1L)) && failing.counters == Map(1L -> 1L))
+    assert(CmsStream.SketchStore.restore(spark, s"$blocked/cms", 64, 3).counters == Map(1L -> 1L))
+  }
+
+  test("sketch acks: a durable CMS ack is one Spark job, an MG ack two, a redelivery none") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.ListenerDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.streaming.{CmsStream, HeavyHittersStream}
+    import spark.implicits._
+    val started = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    def jobs(body: => Unit): Int = {
+      ListenerDrain(spark.sparkContext)
+      started.set(0)
+      body
+      ListenerDrain(spark.sparkContext)
+      started.get()
+    }
+    val dir = Files.createTempDirectory("sketchjobs").toString
+    // three partitions and no exchange, as `foreachBatch` hands a batch over
+    val batch = spark.sparkContext.parallelize(
+      Seq((1L, "alpha beta alpha"), (2L, "gamma beta"), (3L, "delta")), 3).toDF("doc_id", "text")
+    val cms = new CmsStream.SketchStore(2048, 4, Some((spark, s"$dir/cms")))
+    val mg = new HeavyHittersStream.MgStore(64, Some((spark, s"$dir/mg")))
+    spark.sparkContext.addSparkListener(listener)
+    try withSQLConf("spark.sql.adaptive.enabled" -> "true") {
+      assert(jobs(CmsStream.sink(cms)(batch, 0L)) == 1, "durable CMS ack")
+      assert(jobs(HeavyHittersStream.sink(mg)(batch, 0L)) == 2, "durable MG ack")
+      assert(jobs(CmsStream.sink(cms)(batch, 0L)) == 0, "redelivered CMS ack")
+      assert(jobs(HeavyHittersStream.sink(mg)(batch, 0L)) == 0, "redelivered MG ack")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(cms.lastApplied == 0L && mg.lastApplied == 0L)
+    assert(CmsStream.SketchStore.restore(spark, s"$dir/cms", 2048, 4).counters == cms.counters)
+    assert(HeavyHittersStream.MgStore.restore(spark, s"$dir/mg", 64).summary == mg.summary)
+  }
+
+  test("CMS dense fold equals the groupBy counter table") {
+    import spark.implicits._
+    // the distributed groupBy formulation the fold replaced: token ×
+    // row → (j, b) cells, counted, keyed j·width + b
+    def reference(docs: org.apache.spark.sql.DataFrame, width: Int, depth: Int): Map[Long, Long] =
+      docs.select(explode(TextAnalysis.tokens(col("text"))).as("t"))
+        .select(explode(array((0 until depth).map(j => struct(lit(j).as("j"),
+          TextAnalysis.cmsBucket(j, col("t"), width).as("b"))): _*)).as("jb"))
+        .groupBy(col("jb.j"), col("jb.b")).agg(count(lit(1)))
+        .collect().map(r => (r.getInt(0).toLong * width + r.getLong(1)) -> r.getLong(2)).toMap
+    val rows: Seq[(Long, String)] = Seq((1L, null), (2L, ""), (3L, "  "),
+      (4L, "a a a A a"), (5L, "Zeta zeta ZETA"), (6L, "ü ü 日本 日本 x")) ++
+      (7 to 400).map(i => (i.toLong, s"w${i % 13} w${i % 29} w${i % 13} common"))
+    val local = rows.toDF("doc_id", "text")
+    for (docs <- Seq(local, local.repartition(7), local.limit(0));
+         (width, depth) <- Seq((37, 1), (1000, 3), (2, 4), (64, 1), (65537, 2))) {
+      val got = TextAnalysis.cmsFold(docs, width, depth, "text")
+      assert(got == reference(docs, width, depth), s"width $width, depth $depth")
+      assert(got.valuesIterator.forall(_ > 0))
+    }
+    assert(TextAnalysis.cmsFold(local, 64, 3, "text").values.sum == 3L *
+      local.select(explode(TextAnalysis.tokens(col("text")))).count())
+  }
+
+  test("CMS: a counter table over Int.MaxValue cells fails loudly, naming width and depth") {
+    import spark.implicits._
+    import graft.streaming.CmsStream
+    val store = intercept[IllegalArgumentException](new CmsStream.SketchStore(Int.MaxValue, 2))
+    assert(store.getMessage.contains(s"width ${Int.MaxValue}") && store.getMessage.contains("depth 2"),
+      store.getMessage)
+    val docs = Seq((1L, "a b")).toDF("doc_id", "text")
+    val probes = Seq("a").toDF("token")
+    val batch = intercept[IllegalArgumentException](
+      TextAnalysis.cmsTokenEstimates(docs, probes, width = 1 << 30, depth = 3))
+    assert(batch.getMessage.contains(s"width ${1 << 30}") && batch.getMessage.contains("depth 3"),
+      batch.getMessage)
+    // exactly Int.MaxValue counters is still a valid shape
+    new CmsStream.SketchStore(Int.MaxValue, 1)
+  }
+
   test("streaming heavy hitters: MG merge keeps the support guarantee across batches") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
