@@ -1,12 +1,16 @@
 package graft.streaming
 
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicReference
 
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** The exactly-once core under every guarded stream store. A store
@@ -23,7 +27,8 @@ import org.apache.spark.storage.StorageLevel
   *     merges: applied, never committed, the guard untouched.
   *  2. Step. The next state is computed from the current one. Every frame
   *     the step cuts with [[BatchStore.materialize]] is computed in full
-  *     right there, so a failing merge fails here.
+  *     right there, so a failing merge fails here, and depends on no
+  *     earlier batch: its plan and its RDD start at its own blocks.
   *  3. Commit. With a log, the batch lands durably BEFORE the sink
   *     returns, i.e. before the streaming checkpoint commits it: a full
   *     snapshot of the next state when the cadence is due, otherwise the
@@ -35,12 +40,14 @@ import org.apache.spark.storage.StorageLevel
   *  4. Swap. The next state and the advanced guard are published in one
   *     atomic write; a reader never sees one without the other.
   *  5. Prune. After a snapshot, the deltas it supersedes are deleted.
-  *  6. Release. The old state's frames and the step's temporaries are
-  *     unpersisted. If anything before 4 throws, the frames the step cut
-  *     are released instead, state and guard stay as they were, and the
-  *     batch fails: the checkpoint does not commit it, and its
-  *     redelivery applies it once. A failure in 5 propagates, but the
-  *     batch stays applied and guarded; the next snapshot prunes again.
+  *  6. Release. The old state's frames and the step's temporaries drop
+  *     their blocks (a cut's checkpoint RDD is unpersisted: `Dataset.
+  *     unpersist` does not reach it). If anything before 4 throws, the
+  *     frames the step cut are released instead, state and guard stay as
+  *     they were, and the batch fails: the checkpoint does not commit
+  *     it, and its redelivery applies it once. A failure in 5 propagates,
+  *     but the batch stays applied and guarded; the next snapshot prunes
+  *     again.
   * All six run under the store's lock, so two writers (two queries wired
   * to one store) can neither both pass the guard nor interleave merges;
   * the expected topology is still one query per store. Reads are
@@ -52,7 +59,17 @@ import org.apache.spark.storage.StorageLevel
   * cadence counts from the snapshot. The delta log is what makes the gap
   * between snapshots safe: structured streaming re-delivers only the one
   * uncommitted batch, never committed ones, so an unwritten gap would be
-  * lost, not replayed.
+  * lost, not replayed. A driver-held state restores with [[restoreRows]],
+  * which the driver reads itself: no Spark job.
+  *
+  * Recovery of a lost block. A cut keeps its rows only as blocks of the
+  * application's block managers (memory, spilling to local disk); it has
+  * no lineage to recompute them from. A durable store whose state loses
+  * a block restarts through [[restore]] from its own log. A store without
+  * a log fails loudly: Spark's error names the missing checkpoint block.
+  * The same holds for a reader still querying a state after its swap, as
+  * step 6 drops the replaced state's blocks: read the published state
+  * again.
   *
   * @param frames the persisted frames a state owns, released when it is
   *               replaced (none for a driver map)
@@ -108,25 +125,36 @@ private[streaming] final class BatchStore[S](initial: S,
     */
   def restore(read: (Long, Seq[DataFrame]) => S,
       fold: (S, Seq[DataFrame]) => S = (s: S, _: Seq[DataFrame]) => s): Unit =
+    rebuild((l, id) => read(id, l.frames(id)), fold)
+
+  /** [[restore]] for a driver-held state, one written through `rows`:
+    * the driver reads the newest snapshot's tables, as rows of `schemas`
+    * in `log.tables` order ([[SnapshotStore.readRows]]), and `read` turns
+    * them into a state. No Spark job runs.
+    */
+  def restoreRows(schemas: Seq[StructType])(read: Seq[SnapshotStore.Rows] => S): Unit =
+    rebuild((l, id) => read(l.rows(id, schemas)), (s, _) => s)
+
+  private def rebuild(read: (Log, Long) => S, fold: (S, Seq[DataFrame]) => S): Unit =
     synchronized { log.foreach { l =>
       val snap = l.newest
-      val snapId = snap.fold(Long.MinValue)(_._1)
+      val snapId = snap.getOrElse(Long.MinValue)
       val later = l.deltasAfter(snapId)
       if (snap.nonEmpty || later.nonEmpty) {
         val cur = ref.get()._1
         val (next, made) = tracked {
-          val base = snap.fold(cur) { case (id, t) => read(id, t) }
+          val base = snap.fold(cur)(read(l, _))
           if (later.isEmpty) base else fold(base, l.readDeltas(later.map(_._2)))
         }
         ref.set((next, math.max(snapId, later.lastOption.fold(-1L)(_._1))))
-        snapAt = if (snap.nonEmpty) snapId else l.origin
+        snapAt = snap.getOrElse(l.origin)
         settle(cur, next, made)
       }
     } }
 
   private def settle(old: S, next: S, made: Seq[DataFrame]): Unit = {
     val kept = frames(next)
-    (frames(old) ++ made).filterNot(f => kept.exists(_ eq f)).foreach(_.unpersist())
+    (frames(old) ++ made).filterNot(f => kept.exists(_ eq f)).foreach(release)
   }
 }
 
@@ -177,12 +205,19 @@ private[streaming] object BatchStore {
     def prune(id: Long): Unit =
       deltas.foreach(SnapshotStore.pruneDeltas(spark, _, id))
 
-    def newest: Option[(Long, Seq[DataFrame])] = {
-      val id =
-        if (nested) tables.map(t => SnapshotStore.ids(spark, s"$dir/$t", "upto")
-          .map(_._1).toSet).reduce(_ intersect _).maxOption
-        else SnapshotStore.ids(spark, dir, "upto", tables).lastOption.map(_._1)
-      id.map(i => i -> tables.map(t => spark.read.parquet(at(t, i))))
+    /** The id of the newest complete snapshot, if any. */
+    def newest: Option[Long] =
+      if (nested) tables.map(t => SnapshotStore.ids(spark, s"$dir/$t", "upto")
+        .map(_._1).toSet).reduce(_ intersect _).maxOption
+      else SnapshotStore.ids(spark, dir, "upto", tables).lastOption.map(_._1)
+
+    /** Snapshot `id`'s tables, read through Spark. */
+    def frames(id: Long): Seq[DataFrame] = tables.map(t => spark.read.parquet(at(t, id)))
+
+    /** Snapshot `id`'s tables, read by the driver (not nested). */
+    def rows(id: Long, schemas: Seq[StructType]): Seq[SnapshotStore.Rows] = {
+      require(!nested, "driver-read snapshots are not nested")
+      SnapshotStore.readRows(spark, dir, tables.zip(schemas), id)
     }
 
     def deltasAfter(id: Long): Seq[(Long, Path)] = deltas.toSeq.flatMap(d =>
@@ -200,20 +235,38 @@ private[streaming] object BatchStore {
     val outer = cuts.get()
     cuts.set(made)
     try (f, made.toSeq)
-    catch { case e: Throwable => made.foreach(_.unpersist()); throw e }
+    catch { case e: Throwable => made.foreach(release); throw e }
     finally cuts.set(outer)
   }
 
-  /** Cut `df`'s lineage and persist it, computed in full NOW — batch N's
-    * plan never re-derives batches 0..N-1, and a failed merge fails
-    * before any swap. Inside a step the cut is tracked for release.
+  /** Cut `df` with a local checkpoint of its internal rows, computed in
+    * full NOW in one job and kept as blocks (memory, spilling to disk):
+    * batch N's plan and RDD never re-derive batches 0..N-1, the cut keeps
+    * the plan's partitioning and statistics, and a failed merge fails
+    * before any swap. Inside a step the cut is tracked for release BEFORE
+    * its job runs, so a job that fails releases the blocks it wrote
+    * (`eager = true` runs the same one job, but before the cut exists).
     */
   def materialize(df: DataFrame): DataFrame = {
-    val cut = df.sparkSession.createDataFrame(df.rdd, df.schema)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val cut = df.localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK)
+    val blocks = cut.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    unreleased.add(blocks)
     Option(cuts.get()).foreach(_ += cut)
-    cut.count()
+    blocks.count()
     cut
+  }
+
+  // Every cut's checkpoint RDD until its store releases it. Spark holds a
+  // persisted RDD weakly and drops it when a collection finds it
+  // unreachable; held here, a cut's blocks go at its release only, as a
+  // cached frame's do, and the persisted-RDD census moves only then.
+  private val unreleased = ConcurrentHashMap.newKeySet[RDD[_]]()
+
+  // a cut's blocks belong to its checkpoint RDD, which `Dataset.unpersist`
+  // does not reach; any other frame drops its Dataset cache
+  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => unreleased.remove(r.rdd); r.rdd.unpersist()
+    case _ => df.unpersist()
   }
 
   /** Every store's `run`: wire a streaming source into its `foreachBatch`

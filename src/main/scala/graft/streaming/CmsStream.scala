@@ -76,13 +76,14 @@ object CmsStream {
       StructField("n", LongType, nullable = false)))
 
     /** Rebuild a durable store from `dir` (any Spark-writable scheme) —
-      * the restart path, [[BatchStore.restore]]; a missing or empty `dir`
-      * restores a cold store.
+      * the restart path, [[BatchStore.restoreRows]]: the driver reads the
+      * snapshot, no Spark job; a missing or empty `dir` restores a cold
+      * store.
       */
     def restore(spark: SparkSession, dir: String,
         width: Int, depth: Int): SketchStore =
-      new SketchStore(width, depth, Some((spark, dir))).tap(_.core.restore(
-        (_, t) => t.head.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
+      new SketchStore(width, depth, Some((spark, dir))).tap(_.core.restoreRows(Seq(CellSchema))(
+        t => t.head.rows.map(r => r.getLong(0) -> r.getLong(1)).toMap))
   }
 
   /** `(batch, batchId) => Unit` for `writeStream.foreachBatch`: fold the

@@ -103,12 +103,12 @@ object HeavyHittersStream {
       StructField("count", LongType, nullable = false)))
 
     /** Rebuild a durable store from `dir` — the restart path,
-      * [[BatchStore.restore]]; a missing or empty `dir` restores a cold
-      * store.
+      * [[BatchStore.restoreRows]]: the driver reads the snapshot, no Spark
+      * job; a missing or empty `dir` restores a cold store.
       */
     def restore(spark: SparkSession, dir: String, k: Int): MgStore =
-      new MgStore(k, Some((spark, dir))).tap(_.core.restore(
-        (_, t) => t.head.collect().map(r => r.getString(0) -> r.getLong(1)).toMap))
+      new MgStore(k, Some((spark, dir))).tap(_.core.restoreRows(Seq(SummarySchema))(
+        t => t.head.rows.map(r => r.getString(0) -> r.getLong(1)).toMap))
   }
 
   /** `(batch, batchId) => Unit` for `writeStream.foreachBatch`. */

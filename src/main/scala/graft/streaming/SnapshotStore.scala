@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -24,7 +25,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   * written by the driver itself, with parquet-hadoop, as one parquet file
   * followed by `_SUCCESS` — the same layout and column types Spark's
   * writer gives, so either reads back through `spark.read.parquet`, with
-  * no Spark job per commit.
+  * no Spark job per commit. Such a table is read back by the driver too
+  * ([[readRows]], no Spark job per restore), whichever writer wrote it.
   *
   * Listing, deletion and the driver's writes go through Hadoop's
   * `FileSystem` resolved FROM THE SNAPSHOT PATH — the same API the parquet
@@ -108,6 +110,38 @@ private[graft] object SnapshotStore {
     val conf = spark.sparkContext.hadoopConfiguration
     tables.foreach { case (name, t) => writeFile(conf, path(s"$dir/upto=$batchId", name), t) }
     prune(spark, dir, tables.map(_._1))
+  }
+
+  /** Read the `batchId` snapshot's `tables` on the driver, the mirror of
+    * [[writeRows]]: per table, every parquet file of its entry directory
+    * (one, whether the driver or Spark's writer wrote it), as rows of the
+    * given schema, columns matched by name. No Spark job runs.
+    */
+  def readRows(spark: SparkSession, dir: String,
+      tables: Seq[(String, StructType)], batchId: Long): Seq[Rows] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    tables.map { case (name, schema) =>
+      Rows(schema, readFiles(conf, path(s"$dir/upto=$batchId", name), schema))
+    }
+  }
+
+  private def readFiles(conf: Configuration, dir: String, schema: StructType): Seq[Row] = {
+    val in = new Path(dir)
+    val files = in.getFileSystem(conf).listStatus(in).toSeq.map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_") &&
+        !p.getName.startsWith("."))
+    val strings = schema.fields.map(_.dataType == StringType)
+    files.sortBy(_.getName).flatMap { file =>
+      val r = ParquetReader.builder(new GroupReadSupport, file).withConf(conf).build()
+      try Iterator.continually(r.read()).takeWhile(_ != null).map { g =>
+        Row.fromSeq(schema.fields.toSeq.zip(strings).map { case (f, str) =>
+          val i = g.getType.getFieldIndex(f.name)
+          if (g.getFieldRepetitionCount(i) == 0) null
+          else if (str) g.getString(i, 0) else g.getLong(i, 0)
+        })
+      }.toVector
+      finally r.close()
+    }
   }
 
   private def writeFile(conf: Configuration, dir: String, t: Rows): Unit = {

@@ -546,6 +546,24 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
+  /** The Spark jobs `body` starts: how many, and the most stages any one
+    * of them lists. A job lists every stage its RDD depends on, skipped
+    * ones included, so the second figure grows with an uncut lineage.
+    */
+  private def jobsDuring(body: => Unit): (Int, Int) = {
+    import org.apache.spark.ListenerDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = stages.add(e.stageInfos.size)
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    (stages.size, stages.asScala.maxOption.getOrElse(0))
+  }
+
   /** The executed plan of the refresh fold that `body` runs. */
   private def refreshPlan(body: => Unit): org.apache.spark.sql.execution.SparkPlan = {
     import org.apache.spark.sql.execution.QueryExecution
@@ -3899,38 +3917,122 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sketch acks: a durable CMS ack is one Spark job, an MG ack two, a redelivery none") {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.ListenerDrain
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.streaming.{CmsStream, HeavyHittersStream}
     import spark.implicits._
-    val started = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-    }
-    def jobs(body: => Unit): Int = {
-      ListenerDrain(spark.sparkContext)
-      started.set(0)
-      body
-      ListenerDrain(spark.sparkContext)
-      started.get()
-    }
+    def jobs(body: => Unit): Int = jobsDuring(body)._1
     val dir = Files.createTempDirectory("sketchjobs").toString
     // three partitions and no exchange, as `foreachBatch` hands a batch over
     val batch = spark.sparkContext.parallelize(
       Seq((1L, "alpha beta alpha"), (2L, "gamma beta"), (3L, "delta")), 3).toDF("doc_id", "text")
     val cms = new CmsStream.SketchStore(2048, 4, Some((spark, s"$dir/cms")))
     val mg = new HeavyHittersStream.MgStore(64, Some((spark, s"$dir/mg")))
-    spark.sparkContext.addSparkListener(listener)
-    try withSQLConf("spark.sql.adaptive.enabled" -> "true") {
+    withSQLConf("spark.sql.adaptive.enabled" -> "true") {
       assert(jobs(CmsStream.sink(cms)(batch, 0L)) == 1, "durable CMS ack")
       assert(jobs(HeavyHittersStream.sink(mg)(batch, 0L)) == 2, "durable MG ack")
       assert(jobs(CmsStream.sink(cms)(batch, 0L)) == 0, "redelivered CMS ack")
       assert(jobs(HeavyHittersStream.sink(mg)(batch, 0L)) == 0, "redelivered MG ack")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     assert(cms.lastApplied == 0L && mg.lastApplied == 0L)
     assert(CmsStream.SketchStore.restore(spark, s"$dir/cms", 2048, 4).counters == cms.counters)
     assert(HeavyHittersStream.MgStore.restore(spark, s"$dir/mg", 64).summary == mg.summary)
+  }
+
+  test("sketch restores read the snapshot on the driver: no Spark job, Spark-written snapshots too") {
+    import graft.streaming.{CmsStream, HeavyHittersStream}
+    import spark.implicits._
+    val dir = Files.createTempDirectory("sketchrestore").toString
+    val cms = new CmsStream.SketchStore(64, 3, Some((spark, s"$dir/cms")))
+    assert(cms.add(0L, Map(1L -> 3L, 70L -> 2L)) && cms.add(1L, Map(1L -> 1L)))
+    val mg = new HeavyHittersStream.MgStore(4, Some((spark, s"$dir/mg")))
+    assert(mg.add(0L, Map("a" -> 5L, "é" -> 2L)))
+    // the layout of a snapshot that Spark's writer wrote
+    Seq((5L, 9L), (6L, 1L)).toDF("cell", "n").coalesce(1).write.parquet(s"$dir/scms/upto=4")
+    Seq(("x", 3L), ("ü", 2L)).toDF("token", "count").coalesce(1).write.parquet(s"$dir/smg/upto=7")
+    var restored = Seq.empty[(Long, Map[Long, Long])]
+    var restoredMg = Seq.empty[(Long, Map[String, Long])]
+    val (jobs, _) = jobsDuring {
+      restored = Seq("cms", "scms", "none").map { d =>
+        val s = CmsStream.SketchStore.restore(spark, s"$dir/$d", 64, 3)
+        s.lastApplied -> s.counters
+      }
+      restoredMg = Seq("mg", "smg").map { d =>
+        val s = HeavyHittersStream.MgStore.restore(spark, s"$dir/$d", 4)
+        s.lastApplied -> s.summary
+      }
+    }
+    assert(jobs == 0, "a sketch restore must run no Spark job")
+    assert(restored == Seq(1L -> cms.counters, 4L -> Map(5L -> 9L, 6L -> 1L), -1L -> Map.empty))
+    assert(restoredMg == Seq(0L -> mg.summary, 7L -> Map("x" -> 3L, "ü" -> 2L)))
+  }
+
+  test("stream-store cuts carry no lineage: batch 20's jobs list as many stages as batch 2's, and no cut outlives its state") {
+    import scala.collection.mutable.ArrayBuffer
+    import graft.streaming.{CdcStream, CusumStream}
+    import spark.implicits._
+    val dir = Files.createTempDirectory("cutlineage").toString
+    val keys = Seq("user_id", "event_type")
+    val order = Seq("ts_us", "event_id")
+    val payload = Seq("value")
+    def events(i: Int) = (0 until 50).map(j =>
+      (((i * 7 + j) % 40).toLong, s"t${j % 3}", (i * 1000 + j).toLong, (i * 50 + j).toLong, (i + j).toDouble))
+      .toDF("user_id", "event_type", "ts_us", "event_id", "value")
+    def flat(d: org.apache.spark.sql.DataFrame) = d
+      .select(col("user_id"), col("event_type"), col("last.ts_us"),
+        col("last.event_id"), col("last.value"))
+      .collect().map(_.toSeq).toSet
+    val emptyInit = CdcStream.compact(events(0).limit(0), keys, order, payload)
+    val cdc = new CdcStream.CompactStore(spark, keys, emptyInit, durable = Some(dir))
+    val cusum = new CusumStream.CusumStore(spark)
+    def sums(i: Int) = events(i).select((col("event_id") % 10).as("bucket"), col("ts_us").as("v"))
+    // only this test's RDDs count: an earlier test's garbage may be
+    // collected, and leave the census, while this one runs
+    val floor = spark.sparkContext.parallelize(Seq(0)).id
+    def census = spark.sparkContext.getPersistentRDDs.keys.count(_ > floor)
+    // every replaced state stays reachable, so a cut that is not released
+    // stays in the census instead of being collected
+    val held = ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val perBatch = (1 to 20).map { i =>
+      val c = jobsDuring(CdcStream.sink(cdc, keys, order, payload)(events(i), i.toLong))._2
+      val s = jobsDuring(CusumStream.sink(cusum)(sums(i), i.toLong))._2
+      held ++= Seq(cdc.current, cusum.sums)
+      (c, s, census)
+    }
+    val (cdc2, cusum2, census1) = (perBatch(1)._1, perBatch(1)._2, perBatch(0)._3)
+    assert(perBatch(19)._1 == cdc2, s"durable CDC store, stages per batch: ${perBatch.map(_._1)}")
+    assert(perBatch(19)._2 == cusum2, s"non-durable CUSUM store, stages per batch: ${perBatch.map(_._2)}")
+    assert(perBatch.forall(_._3 == census1), s"persisted RDDs per batch: ${perBatch.map(_._3)}")
+    // the cut states are still the right ones
+    val all = (1 to 20).map(events).reduce(_ unionAll _)
+    val expect = flat(CdcStream.compact(all, keys, order, payload))
+    assert(flat(cdc.current) == expect)
+    assert(flat(CdcStream.CompactStore.restore(spark, dir, keys, emptyInit).current) == expect)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(rows(cusum.sums) == rows((1 to 20).map(sums).reduce(_ unionAll _)
+      .groupBy("bucket").agg(sum("v"))))
+  }
+
+  test("a merge whose cut fails in its own job releases that cut and keeps state and guard") {
+    import graft.streaming.CusumStream
+    import spark.implicits._
+    val store = new CusumStream.CusumStore(spark)
+    assert(store.merge(Seq((1L, Long.MaxValue)).toDF("bucket", "v"), 0L))
+    val held = store.sums
+    val floor = spark.sparkContext.parallelize(Seq(0)).id
+    def census = spark.sparkContext.getPersistentRDDs.keys.count(_ > floor)
+    // the merged sum overflows in the projection after the join, so the
+    // failure comes from the cut's own job, not from a stage before it
+    withSQLConf("spark.sql.ansi.enabled" -> "true") {
+      val e = intercept[Exception](store.merge(Seq((1L, 1L)).toDF("bucket", "v"), 1L))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("ARITHMETIC_OVERFLOW")), e)
+    }
+    assert(census == 0, "the failed cut's RDD must be unpersisted")
+    assert(store.sums eq held, "a failed merge must keep the served state")
+    assert(store.merge(Seq((2L, 3L)).toDF("bucket", "v"), 1L),
+      "the failed batch must not have advanced the guard")
+    assert(store.sums.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((1L, Long.MaxValue), (2L, 3L)))
   }
 
   test("CMS dense fold equals the groupBy counter table") {
